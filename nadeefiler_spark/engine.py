@@ -16,6 +16,22 @@ Job model mapped from the reference (SURVEY §2.8):
 - resume (north_rule) = checkpoint manifest table of completed
   (partition, stage) with metrics; a re-run skips completed pairs.
 
+Stage runner: every stage, the four in :meth:`ValidationEngine.run` and
+each cascade ``run_*``, goes through ``_stage(stage, units, resume,
+run_id, body)``. A unit is the stage's resume grain: a partition value
+for per-partition and global stages, or one logical id (a delivery
+batch id, a baseline id) for admission and suite regression. With
+``resume`` the runner drops the units the manifest already holds for
+the stage and, if none remain, returns an empty verdict frame without
+running anything. Otherwise it times ``body(pending)``, which writes the
+stage's output table(s) and returns ``(n_rows_by_part, n_viol_by_part)``
+dicts keyed by unit (a missing unit counts 0), commits one manifest row
+per pending unit under the engine's commit lock, and returns this run's
+verdicts for the stage (``run()`` returns one frame for all its stages
+instead). What n_rows and n_violations count is each
+stage's own definition, documented on its ``run_*`` method: clips
+scanned, clips sampled, violating history rows, regressed checks.
+
 Scale notes: each stage runs ONE Spark job covering all pending
 partitions (partition-pruned scan), not a job per partition — at 10^5
 partitions per-partition jobs would be scheduler-bound. Per-partition
@@ -92,6 +108,8 @@ class ValidationEngine:
     def __post_init__(self) -> None:
         if self.io is None:
             self.io = default_io(self.spark, self.out_dir)
+        # concurrent stages (run() on a cluster master) commit one at a time
+        self._commit_lock = threading.Lock()
 
     # --- output tables -------------------------------------------------
     def manifest(self) -> DataFrame:
@@ -183,7 +201,7 @@ class ValidationEngine:
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         cfg = self.profile_cfg or prof.ProfileConfig(part_col=self.part_col)
-        all_parts = [r[0] for r in clips.select(self.part_col).distinct().collect()]
+        all_parts = self._parts(clips)
 
         done: set[tuple[str, str]] = set()
         if resume:
@@ -237,37 +255,33 @@ class ValidationEngine:
                 ).persist()
 
         rows_cache: dict[str, int] = {}  # filled by the profile stage
-        commit_lock = threading.Lock()
 
         def run_stage(stage: str) -> None:
-            pending = pending_of[stage]
-            if not pending:
-                return
-            if fail_stage == stage:
-                raise RuntimeError(f"injected failure before stage {stage!r}")
-            t0 = time.monotonic()
-            scoped = clips.where(F.col(self.part_col).isin(pending))
-            refs_scoped = refs
-            if refs is not None and self.part_col in refs.columns:
-                refs_scoped = refs.where(F.col(self.part_col).isin(pending))
-            stage_decoded = None
-            if decoded is not None and stage in ("profile", "audio"):
-                if stage == "profile" and self.triage_sample_pct is not None:
-                    # triage decode is a row subset: its length stats
-                    # would under-count, so profile keeps the direct
-                    # expression path (pinned equal to the fused path)
-                    stage_decoded = None
-                else:
+            def body(pending):
+                if fail_stage == stage:
+                    raise RuntimeError(f"injected failure before stage {stage!r}")
+                scoped = clips.where(F.col(self.part_col).isin(pending))
+                refs_scoped = refs
+                if refs is not None and self.part_col in refs.columns:
+                    refs_scoped = refs.where(F.col(self.part_col).isin(pending))
+                # triage decode is a row subset: its length stats
+                # would under-count, so profile keeps the direct
+                # expression path (pinned equal to the fused path)
+                stage_decoded = None
+                if decoded is not None and (
+                    stage == "audio"
+                    or (stage == "profile" and self.triage_sample_pct is None)
+                ):
                     stage_decoded = decoded.where(
                         F.col("part").isin([str(p) for p in pending])
                     )
 
-            if stage == "profile":
-                n_rows_by_part, n_viol_by_part = self._run_profile(
-                    scoped, cfg, pending, decoded=stage_decoded
-                )
-                rows_cache.update(n_rows_by_part)
-            else:
+                if stage == "profile":
+                    n_rows_by_part, n_viol_by_part = self._run_profile(
+                        scoped, cfg, pending, decoded=stage_decoded
+                    )
+                    rows_cache.update(n_rows_by_part)
+                    return n_rows_by_part, n_viol_by_part
                 ctx = RuleContext(
                     spark=self.spark,
                     clips=scoped,
@@ -285,10 +299,12 @@ class ValidationEngine:
                 else:  # resumed run that skipped the profile stage
                     n_rows_by_part = self._rows_by_part(pending)
                     rows_cache.update(n_rows_by_part)
+                return n_rows_by_part, n_viol_by_part
 
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            with commit_lock:
-                self._commit(run_id, stage, pending, n_rows_by_part, n_viol_by_part, wall_ms)
+            # resume=False: every stage's pending set was resolved above
+            # from ONE manifest read; verdicts=False: run() returns one
+            # frame for all its stages (each frame costs a manifest listing)
+            self._stage(stage, pending_of[stage], False, run_id, body, verdicts=False)
 
         # profile runs first: every later stage may read its outputs
         try:
@@ -360,35 +376,19 @@ class ValidationEngine:
         """
         from . import semantic as sem
 
-        run_id = run_id or uuid.uuid4().hex[:12]
         hist = self.profile_hist().where(F.col("kind") == "value")
-        all_parts = [r[0] for r in hist.select("part").distinct().collect()]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "semantic")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if p not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "semantic") & (F.col("run_id") == run_id)
+
+        def body(pending):
+            string_hist = hist.where(F.col("part").isin(pending)).select(
+                "part", "key", F.col("bin").alias("value"), "count"
             )
-        t0 = time.monotonic()
-        string_hist = hist.where(F.col("part").isin(pending)).select(
-            "part", "key", F.col("bin").alias("value"), "count"
-        )
-        scores = sem.semantic_scores(
-            string_hist, kb, top_k=top_k, group_cols=("part", "key")
-        )
-        self.io.replace_partitions(scores, "semantic_scores", "part", pending)
-        rows = self._rows_by_part(pending)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(run_id, "semantic", pending, rows, {p: 0 for p in pending}, wall_ms)
-        return self.verdicts().where(
-            (F.col("stage") == "semantic") & (F.col("run_id") == run_id)
-        )
+            scores = sem.semantic_scores(
+                string_hist, kb, top_k=top_k, group_cols=("part", "key")
+            )
+            self.io.replace_partitions(scores, "semantic_scores", "part", pending)
+            return self._rows_by_part(pending), {}
+
+        return self._stage("semantic", self._parts(hist, "part"), resume, run_id, body)
 
     def semantic_scores_table(self) -> DataFrame:
         return self.io.read(
@@ -418,43 +418,24 @@ class ValidationEngine:
         """
         from . import fd as fdm
 
-        run_id = run_id or uuid.uuid4().hex[:12]
         if cols is None:
             cols = [
                 f.name for f in clips.schema.fields
                 if f.name != self.part_col and "Binary" not in str(f.dataType)
             ]
-        all_parts = [r[0] for r in clips.select(self.part_col).distinct().collect()]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "fd")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "fd") & (F.col("run_id") == run_id)
-            )
-        t0 = time.monotonic()
-        scoped = clips.where(F.col(self.part_col).isin(pending))
-        mined = fdm.mine_fds(
-            scoped, cols, max_ndv_frac=max_ndv_frac,
-            max_violation_rate=max_violation_rate, part_col=self.part_col,
-        ).withColumn(self.part_col, F.col(self.part_col).cast("string"))
-        if self.part_col != "part":
-            mined = mined.withColumnRenamed(self.part_col, "part")
-        self.io.replace_partitions(mined, "fd_results", "part", [str(p) for p in pending])
-        rows = self._rows_by_part(pending)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "fd", [str(p) for p in pending],
-            rows, {str(p): 0 for p in pending}, wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "fd") & (F.col("run_id") == run_id)
-        )
+
+        def body(pending):
+            scoped = clips.where(F.col(self.part_col).isin(pending))
+            mined = fdm.mine_fds(
+                scoped, cols, max_ndv_frac=max_ndv_frac,
+                max_violation_rate=max_violation_rate, part_col=self.part_col,
+            ).withColumn(self.part_col, F.col(self.part_col).cast("string"))
+            if self.part_col != "part":
+                mined = mined.withColumnRenamed(self.part_col, "part")
+            self.io.replace_partitions(mined, "fd_results", "part", pending)
+            return self._rows_by_part(pending), {}
+
+        return self._stage("fd", self._parts(clips), resume, run_id, body)
 
     def fd_results(self) -> DataFrame:
         return self.io.read(
@@ -617,48 +598,18 @@ class ValidationEngine:
         pays only its own partitions. n_violations = undecodable clips
         in the partition (they can never content-match an admission).
         """
-        run_id = run_id or uuid.uuid4().hex[:12]
-        all_parts = [
-            r[0] for r in clips.select(self.part_col).distinct().collect()
-        ]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "fp_index")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "fp_index") & (F.col("run_id") == run_id)
+
+        def body(pending):
+            scoped = clips.where(F.col(self.part_col).isin(pending))
+            idx = decode_facts(scoped, with_snr=False, with_fp=True).select(
+                "clip_id", "fp", "decode_error", F.col("part").alias(self.part_col)
             )
-        t0 = time.monotonic()
-        scoped = clips.where(F.col(self.part_col).isin(pending))
-        idx = decode_facts(scoped, with_snr=False, with_fp=True).select(
-            "clip_id", "fp", "decode_error", F.col("part").alias(self.part_col)
-        ).persist()
-        try:
-            self.io.replace_partitions(idx, "fp_index", self.part_col, pending)
-            stats = {
-                str(r[0]): (r["n"], r["bad"])
-                for r in idx.groupBy(self.part_col).agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("fp").isNull().cast("bigint")).alias("bad"),
-                ).collect()
-            }
-        finally:
-            idx.unpersist()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "fp_index", [str(p) for p in pending],
-            {p: int(stats.get(p, (0, 0))[0]) for p in map(str, pending)},
-            {p: int(stats.get(p, (0, 0))[1] or 0) for p in map(str, pending)},
-            wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "fp_index") & (F.col("run_id") == run_id)
-        )
+            return self._replace_counted(
+                idx, "fp_index", self.part_col, pending,
+                F.count(F.lit(1)), F.sum(F.col("fp").isNull().cast("bigint")),
+            )
+
+        return self._stage("fp_index", self._parts(clips), resume, run_id, body)
 
     def run_vad(
         self,
@@ -678,54 +629,20 @@ class ValidationEngine:
         speech_ratio == 0) — the dead-corpus members a speech-training
         ingest wants surfaced.
         """
-        run_id = run_id or uuid.uuid4().hex[:12]
-        all_parts = [
-            r[0] for r in clips.select(self.part_col).distinct().collect()
-        ]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "vad")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "vad") & (F.col("run_id") == run_id)
+
+        def body(pending):
+            scoped = clips.where(F.col(self.part_col).isin(pending))
+            vad = decode_facts(scoped, with_snr=False, with_vad=True).select(
+                "clip_id", "speech_ratio", "n_speech_runs", "longest_silence_ms",
+                "decode_error", F.col("part").alias(self.part_col),
             )
-        t0 = time.monotonic()
-        scoped = clips.where(F.col(self.part_col).isin(pending))
-        vad = decode_facts(scoped, with_snr=False, with_vad=True).select(
-            "clip_id", "speech_ratio", "n_speech_runs", "longest_silence_ms",
-            "decode_error", F.col("part").alias(self.part_col),
-        ).persist()
-        try:
-            self.io.replace_partitions(vad, "vad_stats", self.part_col, pending)
-            stats = {
-                str(r[0]): (r["n"], r["bad"])
-                for r in vad.groupBy(self.part_col).agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(
-                        (
-                            F.col("decode_error").isNotNull()
-                            | (F.col("speech_ratio") == 0.0)
-                        ).cast("bigint")
-                    ).alias("bad"),
-                ).collect()
-            }
-        finally:
-            vad.unpersist()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "vad", [str(p) for p in pending],
-            {p: int(stats.get(p, (0, 0))[0]) for p in map(str, pending)},
-            {p: int(stats.get(p, (0, 0))[1] or 0) for p in map(str, pending)},
-            wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "vad") & (F.col("run_id") == run_id)
-        )
+            no_speech = F.col("decode_error").isNotNull() | (F.col("speech_ratio") == 0.0)
+            return self._replace_counted(
+                vad, "vad_stats", self.part_col, pending,
+                F.count(F.lit(1)), F.sum(no_speech.cast("bigint")),
+            )
+
+        return self._stage("vad", self._parts(clips), resume, run_id, body)
 
     def run_certificate(
         self,
@@ -769,72 +686,34 @@ class ValidationEngine:
         from .certify import attach_bound
         from .operators.sample import sample_key, threshold
 
-        run_id = run_id or uuid.uuid4().hex[:12]
-        all_parts = [
-            r[0] for r in clips.select(self.part_col).distinct().collect()
-        ]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "certificate")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "certificate") & (F.col("run_id") == run_id)
+        def body(pending):
+            scoped = clips.where(F.col(self.part_col).isin(pending))
+            key = F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(2**31))
+            sampled = scoped.where(sample_key(key, salt) < F.lit(threshold(fraction)))
+            facts = decode_facts(sampled, with_snr=False)
+            tol = F.greatest(F.lit(float(abs_tol_ms)), F.lit(rel_tol) * F.col("dur_ms"))
+            viol = (
+                F.col("decode_error").isNotNull()
+                | (F.col("dec_sr") != F.col("sr_hz"))
+                | (F.abs(F.col("dec_ms") - F.col("dur_ms")) > tol)
             )
-        t0 = time.monotonic()
-        scoped = clips.where(F.col(self.part_col).isin(pending))
-        key = F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(2**31))
-        sampled = scoped.where(
-            sample_key(key, salt) < F.lit(threshold(fraction))
-        )
-        facts = decode_facts(sampled, with_snr=False)
-        tol = F.greatest(
-            F.lit(float(abs_tol_ms)), F.lit(rel_tol) * F.col("dur_ms")
-        )
-        viol = (
-            F.col("decode_error").isNotNull()
-            | (F.col("dec_sr") != F.col("sr_hz"))
-            | (F.abs(F.col("dec_ms") - F.col("dur_ms")) > tol)
-        )
-        agg = facts.groupBy("part").agg(
-            F.count(F.lit(1)).alias("n_sampled"),
-            F.sum(viol.cast("bigint")).alias("n_viol"),
-        )
-        parts_df = self.spark.createDataFrame(
-            [(str(p),) for p in pending], "part string"
-        )
-        agg = parts_df.join(agg, ["part"], "left").fillna(
-            0, subset=["n_sampled", "n_viol"]
-        )
-        cert = (
-            attach_bound(agg, eps, delta, keys=["part"])
-            .withColumnRenamed("part", self.part_col)
-            .persist()
-        )
-        try:
-            self.io.replace_partitions(
-                cert, "certificates", self.part_col, [str(p) for p in pending]
+            agg = facts.groupBy("part").agg(
+                F.count(F.lit(1)).alias("n_sampled"),
+                F.sum(viol.cast("bigint")).alias("n_viol"),
             )
-            stats = {
-                str(r[self.part_col]): (r["n_sampled"], r["n_viol"])
-                for r in cert.collect()
-            }
-        finally:
-            cert.unpersist()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "certificate", [str(p) for p in pending],
-            {p: int(stats.get(p, (0, 0))[0]) for p in map(str, pending)},
-            {p: int(stats.get(p, (0, 0))[1] or 0) for p in map(str, pending)},
-            wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "certificate") & (F.col("run_id") == run_id)
-        )
+            parts_df = self.spark.createDataFrame([(str(p),) for p in pending], "part string")
+            agg = parts_df.join(agg, ["part"], "left").fillna(
+                0, subset=["n_sampled", "n_viol"]
+            )
+            cert = attach_bound(agg, eps, delta, keys=["part"]).withColumnRenamed(
+                "part", self.part_col
+            )
+            return self._replace_counted(
+                cert, "certificates", self.part_col, pending,
+                F.sum("n_sampled"), F.sum("n_viol"),
+            )
+
+        return self._stage("certificate", self._parts(clips), resume, run_id, body)
 
     def run_probe_stats(
         self,
@@ -855,46 +734,14 @@ class ValidationEngine:
         """
         from .operators.headerprobe import probe_stats
 
-        run_id = run_id or uuid.uuid4().hex[:12]
-        all_parts = [
-            r[0] for r in clips.select(self.part_col).distinct().collect()
-        ]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "probe")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "probe") & (F.col("run_id") == run_id)
+        def body(pending):
+            scoped = clips.where(F.col(self.part_col).isin(pending))
+            return self._replace_counted(
+                probe_stats(scoped, by=(self.part_col,)), "probe_health",
+                self.part_col, pending, F.sum("n_clips"), F.sum("n_flagged"),
             )
-        t0 = time.monotonic()
-        scoped = clips.where(F.col(self.part_col).isin(pending))
-        stats = probe_stats(scoped, by=(self.part_col,)).persist()
-        try:
-            self.io.replace_partitions(
-                stats, "probe_health", self.part_col,
-                [str(p) for p in pending],
-            )
-            by_part = {
-                str(r[self.part_col]): (r["n_clips"], r["n_flagged"])
-                for r in stats.collect()
-            }
-        finally:
-            stats.unpersist()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "probe", [str(p) for p in pending],
-            {p: int(by_part.get(p, (0, 0))[0]) for p in map(str, pending)},
-            {p: int(by_part.get(p, (0, 0))[1] or 0) for p in map(str, pending)},
-            wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "probe") & (F.col("run_id") == run_id)
-        )
+
+        return self._stage("probe", self._parts(clips), resume, run_id, body)
 
     def probe_health(self) -> DataFrame:
         from .operators.headerprobe import FINDING_KINDS
@@ -937,59 +784,29 @@ class ValidationEngine:
         """
         from .operators.sessions import session_stats
 
-        run_id = run_id or uuid.uuid4().hex[:12]
         hist = self.manifest().where(~F.col("stage").isin(*self._META_STAGES))
         ev = hist.where(F.col("n_violations") > 0)
-        all_parts = [r[0] for r in ev.select("part").distinct().collect()]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "incidents")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "incidents") & (F.col("run_id") == run_id)
+
+        def body(pending):
+            scoped = ev.where(F.col("part").isin(pending))
+            key = F.concat_ws("\x1f", "part", "stage")
+            sess = session_stats(
+                scoped.withColumn("__k", key), "__k", "completed_at",
+                gap_s=gap_s, tiebreak_col="run_id",
+            ).select(
+                F.split("user", "\x1f").getItem(0).alias("part"),
+                F.split("user", "\x1f").getItem(1).alias("v_stage"),
+                F.col("session_idx").cast("bigint").alias("incident_idx"),
+                F.col("n_events").cast("bigint").alias("n_runs"),
+                "t_start", "t_end",
+                F.col("dur_s").cast("bigint").alias("dur_s"),
             )
-        t0 = time.monotonic()
-        scoped = ev.where(F.col("part").isin(pending))
-        key = F.concat_ws("\x1f", "part", "stage")
-        sess = session_stats(
-            scoped.withColumn("__k", key), "__k", "completed_at",
-            gap_s=gap_s, tiebreak_col="run_id",
-        ).select(
-            F.split("user", "\x1f").getItem(0).alias("part"),
-            F.split("user", "\x1f").getItem(1).alias("v_stage"),
-            F.col("session_idx").cast("bigint").alias("incident_idx"),
-            F.col("n_events").cast("bigint").alias("n_runs"),
-            "t_start", "t_end",
-            F.col("dur_s").cast("bigint").alias("dur_s"),
-        ).persist()
-        try:
-            self.io.replace_partitions(
-                sess, "incident_sessions", "part", [str(p) for p in pending]
+            return self._replace_counted(
+                sess, "incident_sessions", "part", pending,
+                F.sum("n_runs"), F.count(F.lit(1)),
             )
-            agg = {
-                r["part"]: (r["n_runs"], r["n_inc"])
-                for r in sess.groupBy("part").agg(
-                    F.sum("n_runs").alias("n_runs"),
-                    F.count(F.lit(1)).alias("n_inc"),
-                ).collect()
-            }
-        finally:
-            sess.unpersist()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "incidents", [str(p) for p in pending],
-            {p: int(agg.get(p, (0, 0))[0] or 0) for p in map(str, pending)},
-            {p: int(agg.get(p, (0, 0))[1] or 0) for p in map(str, pending)},
-            wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "incidents") & (F.col("run_id") == run_id)
-        )
+
+        return self._stage("incidents", self._parts(ev, "part"), resume, run_id, body)
 
     def incident_sessions(self) -> DataFrame:
         return self.io.read(
@@ -1023,7 +840,6 @@ class ValidationEngine:
         """
         from .operators.temporal import asof_join
 
-        run_id = run_id or uuid.uuid4().hex[:12]
         hist = self.manifest()
         target = hist.where(F.col("stage").isin(*target_stages))
         # one screen per (part, ts): two screen commits stamped the same
@@ -1035,62 +851,32 @@ class ValidationEngine:
             .agg(F.max("run_id").alias("run_id"))
             .select("part", "completed_at", "run_id")
         )
-        all_parts = [r[0] for r in target.select("part").distinct().collect()]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "screen")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "screen") & (F.col("run_id") == run_id)
+
+        def body(pending):
+            scoped = target.where(F.col("part").isin(pending)).select(
+                "part", "stage", "run_id", "completed_at", "n_violations"
             )
-        t0 = time.monotonic()
-        scoped = target.where(F.col("part").isin(pending)).select(
-            "part", "stage", "run_id", "completed_at", "n_violations"
-        )
-        # no tiebreak: commit timestamps are per-(stage, run) and the
-        # asof tiebreak casts to long (run_id is a hex string)
-        att = asof_join(
-            scoped, screens, ["part"], "completed_at", "completed_at",
-            ["run_id", "completed_at"], prefix="screen_",
-        ).select(
-            "part", F.col("stage").alias("t_stage"), "run_id",
-            "completed_at", "n_violations",
-            "screen_run_id", "screen_completed_at",
-            (
-                F.unix_timestamp("completed_at")
-                - F.unix_timestamp("screen_completed_at")
-            ).cast("bigint").alias("screen_lag_s"),
-        ).persist()
-        try:
-            self.io.replace_partitions(
-                att, "screen_attribution", "part", [str(p) for p in pending]
+            # no tiebreak: commit timestamps are per-(stage, run) and the
+            # asof tiebreak casts to long (run_id is a hex string)
+            att = asof_join(
+                scoped, screens, ["part"], "completed_at", "completed_at",
+                ["run_id", "completed_at"], prefix="screen_",
+            ).select(
+                "part", F.col("stage").alias("t_stage"), "run_id",
+                "completed_at", "n_violations",
+                "screen_run_id", "screen_completed_at",
+                (
+                    F.unix_timestamp("completed_at")
+                    - F.unix_timestamp("screen_completed_at")
+                ).cast("bigint").alias("screen_lag_s"),
             )
-            agg = {
-                r["part"]: (r["n"], r["n_unscreened"])
-                for r in att.groupBy("part").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(
-                        F.col("screen_run_id").isNull().cast("bigint")
-                    ).alias("n_unscreened"),
-                ).collect()
-            }
-        finally:
-            att.unpersist()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "screen", [str(p) for p in pending],
-            {p: int(agg.get(p, (0, 0))[0] or 0) for p in map(str, pending)},
-            {p: int(agg.get(p, (0, 0))[1] or 0) for p in map(str, pending)},
-            wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "screen") & (F.col("run_id") == run_id)
-        )
+            return self._replace_counted(
+                att, "screen_attribution", "part", pending,
+                F.count(F.lit(1)),
+                F.sum(F.col("screen_run_id").isNull().cast("bigint")),
+            )
+
+        return self._stage("screen", self._parts(target, "part"), resume, run_id, body)
 
     def screen_attribution(self) -> DataFrame:
         return self.io.read(
@@ -1178,55 +964,32 @@ class ValidationEngine:
         """
         from .operators.audio_fp import incremental_clip_admission
 
-        run_id = run_id or uuid.uuid4().hex[:12]
-        if resume and not self.manifest().where(
-            (F.col("stage") == "admission") & (F.col("part") == batch_id)
-        ).isEmpty():
-            return self.verdicts().where(
-                (F.col("stage") == "admission") & (F.col("run_id") == run_id)
+        def body(pending):
+            fps = corpus_fps
+            if fps is None:
+                # prefer the maintained fp_index when it covers every current
+                # corpus partition (freshness is partition-granular — the
+                # engine's resume unit everywhere); otherwise decode inline
+                idx_parts = {
+                    r[0]
+                    for r in self.manifest().where(F.col("stage") == "fp_index")
+                    .select("part").distinct().collect()
+                }
+                cur_parts = {str(p) for p in self._parts(clips)}
+                if cur_parts and cur_parts <= idx_parts:
+                    fps = self.fp_index().select("clip_id", "fp")
+                else:
+                    fps = decode_facts(clips, with_snr=False, with_fp=True).select("clip_id", "fp")
+            raw = incremental_clip_admission(
+                clips, batch, max_hamming=max_hamming, corpus_fps=fps
             )
-        t0 = time.monotonic()
-        if corpus_fps is None:
-            # prefer the maintained fp_index when it covers every current
-            # corpus partition (freshness is partition-granular — the
-            # engine's resume unit everywhere); otherwise decode inline
-            idx_parts = {
-                r[0]
-                for r in self.manifest().where(F.col("stage") == "fp_index")
-                .select("part").distinct().collect()
-            }
-            cur_parts = {
-                str(r[0])
-                for r in clips.select(self.part_col).distinct().collect()
-            }
-            if cur_parts and cur_parts <= idx_parts:
-                corpus_fps = self.fp_index().select("clip_id", "fp")
-            else:
-                corpus_fps = decode_facts(
-                    clips, with_snr=False, with_fp=True
-                ).select("clip_id", "fp")
-        raw = incremental_clip_admission(
-            clips, batch, max_hamming=max_hamming, corpus_fps=corpus_fps
-        )
-        adm = raw.withColumn("part", F.lit(batch_id))
-        try:
-            self.io.replace_partitions(adm, "admissions", "part", [batch_id])
-            agg = raw.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    (F.col("disposition") != "accept").cast("bigint")
-                ).alias("v"),
-            ).collect()[0]
-        finally:
-            raw.unpersist()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "admission", [batch_id],
-            {batch_id: int(agg["n"])}, {batch_id: int(agg["v"] or 0)}, wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "admission") & (F.col("run_id") == run_id)
-        )
+            return self._replace_counted(
+                raw.withColumn("part", F.lit(batch_id)), "admissions", "part",
+                pending, F.count(F.lit(1)),
+                F.sum((F.col("disposition") != "accept").cast("bigint")),
+            )
+
+        return self._stage("admission", [batch_id], resume, run_id, body)
 
     def _run_global_stage(
         self,
@@ -1244,40 +1007,21 @@ class ValidationEngine:
         cleanup)`` where table_df carries part='*', implicated_df has one
         row per implicated clip with its partition column, and cleanup
         releases any persisted intermediates after the write + count."""
-        run_id = run_id or uuid.uuid4().hex[:12]
-        all_parts = [r[0] for r in clips.select(self.part_col).distinct().collect()]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == stage)
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == stage) & (F.col("run_id") == run_id)
-            )
-        t0 = time.monotonic()
-        groups, implicated, cleanup = compute()
-        try:
-            self.io.replace_partitions(groups, table, "part", ["*"])
-            viol = {
-                str(r[0]): r["c"]
-                for r in implicated.groupBy(self.part_col)
-                .agg(F.count(F.lit(1)).alias("c")).collect()
-            }
-        finally:
-            cleanup()
-        rows = self._rows_by_part(pending)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, stage, [str(p) for p in pending],
-            rows, {str(p): viol.get(str(p), 0) for p in pending}, wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == stage) & (F.col("run_id") == run_id)
-        )
+
+        def body(pending):
+            groups, implicated, cleanup = compute()
+            try:
+                self.io.replace_partitions(groups, table, "part", ["*"])
+                viol = {
+                    str(r[0]): r["c"]
+                    for r in implicated.groupBy(self.part_col)
+                    .agg(F.count(F.lit(1)).alias("c")).collect()
+                }
+            finally:
+                cleanup()
+            return self._rows_by_part(pending), viol
+
+        return self._stage(stage, self._parts(clips), resume, run_id, body)
 
     # --- cascade stage: schema discovery (keys + INDs) ----------------------
     def run_discovery(
@@ -1440,48 +1184,27 @@ class ValidationEngine:
             from .presets import default_clip_expectations
 
             checks = default_clip_expectations()
-        run_id = run_id or uuid.uuid4().hex[:12]
-        all_parts = [r[0] for r in clips.select(self.part_col).distinct().collect()]
-        done: set[str] = set()
-        if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == "expectations")
-                .select("part").distinct().collect()
-            }
-        pending = [p for p in all_parts if str(p) not in done]
-        if not pending:
-            return self.verdicts().where(
-                (F.col("stage") == "expectations") & (F.col("run_id") == run_id)
+
+        def body(pending):
+            scoped = clips.where(F.col(self.part_col).isin(pending))
+            out = ex.verify(scoped, checks, by=[self.part_col]).select(
+                F.col(self.part_col).cast("string").alias("part"),
+                "check", "column", "value", "lo", "hi", "passed",
             )
-        t0 = time.monotonic()
-        scoped = clips.where(F.col(self.part_col).isin(pending))
-        out = ex.verify(scoped, checks, by=[self.part_col]).select(
-            F.col(self.part_col).cast("string").alias("part"),
-            "check", "column", "value", "lo", "hi", "passed",
-        )
-        self.io.replace_partitions(
-            out, "expectation_results", "part", [str(p) for p in pending]
-        )
-        # failed-check counts from the (tiny, #parts x #checks) result
-        # table — never a second scan of clips
-        res = self.expectation_results().where(
-            F.col("part").isin([str(p) for p in pending])
-        )
-        viol = {
-            r["part"]: int(r["c"])
-            for r in res.where(~F.col("passed"))
-            .groupBy("part").agg(F.count(F.lit(1)).alias("c")).collect()
-        }
-        rows = self._rows_by_part(pending)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "expectations", [str(p) for p in pending],
-            rows, {str(p): viol.get(str(p), 0) for p in pending}, wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "expectations") & (F.col("run_id") == run_id)
-        )
+            self.io.replace_partitions(out, "expectation_results", "part", pending)
+            # failed-check counts from the (tiny, #parts x #checks) result
+            # table — never a second scan of clips
+            res = self.expectation_results().where(
+                F.col("part").isin([str(p) for p in pending])
+            )
+            viol = {
+                r["part"]: int(r["c"])
+                for r in res.where(~F.col("passed"))
+                .groupBy("part").agg(F.count(F.lit(1)).alias("c")).collect()
+            }
+            return self._rows_by_part(pending), viol
+
+        return self._stage("expectations", self._parts(clips), resume, run_id, body)
 
     def run_suite_regression(
         self,
@@ -1510,44 +1233,30 @@ class ValidationEngine:
         """
         from . import expectations as ex
 
-        run_id = run_id or uuid.uuid4().hex[:12]
-        if resume and not self.manifest().where(
-            (F.col("stage") == "suite_regression")
-            & (F.col("part") == baseline_id)
-        ).isEmpty():
-            return self.verdicts().where(
-                (F.col("stage") == "suite_regression")
-                & (F.col("run_id") == run_id)
+        def body(pending):
+            current = self.profile_summary()
+            if current.isEmpty():
+                raise ValueError(
+                    "run_suite_regression needs a materialized profile_summary — "
+                    "run the profile stage first"
+                )
+            out = ex.suite_regressions(
+                baseline_profile, current,
+                null_tolerance=null_tolerance, low_card_max=low_card_max,
+            ).select(
+                F.lit(baseline_id).alias("part"),
+                "key", "check", "lo", "hi", "observed_lo", "observed_hi",
             )
-        current = self.profile_summary()
-        if current.isEmpty():
-            raise ValueError(
-                "run_suite_regression needs a materialized profile_summary — "
-                "run the profile stage first"
+            self.io.replace_partitions(
+                out, "suite_regression_results", "part", [baseline_id]
             )
-        t0 = time.monotonic()
-        out = ex.suite_regressions(
-            baseline_profile, current,
-            null_tolerance=null_tolerance, low_card_max=low_card_max,
-        ).select(
-            F.lit(baseline_id).alias("part"),
-            "key", "check", "lo", "hi", "observed_lo", "observed_hi",
-        )
-        self.io.replace_partitions(
-            out, "suite_regression_results", "part", [baseline_id]
-        )
-        # counts from the (tiny) result table, never a re-scan
-        n = self.suite_regression_results().where(
-            F.col("part") == baseline_id
-        ).count()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._commit(
-            run_id, "suite_regression", [baseline_id],
-            {baseline_id: int(n)}, {baseline_id: int(n)}, wall_ms,
-        )
-        return self.verdicts().where(
-            (F.col("stage") == "suite_regression") & (F.col("run_id") == run_id)
-        )
+            # counts from the (tiny) result table, never a re-scan
+            n = self.suite_regression_results().where(
+                F.col("part") == baseline_id
+            ).count()
+            return {baseline_id: n}, {baseline_id: n}
+
+        return self._stage("suite_regression", [baseline_id], resume, run_id, body)
 
     def clean_clips(
         self,
@@ -1659,6 +1368,56 @@ class ValidationEngine:
             "vad_stats",
             "clip_id string, speech_ratio double, n_speech_runs int, "
             "longest_silence_ms int, decode_error string, part string",
+        )
+
+    # --- stage runner -----------------------------------------------------
+    def _stage(self, stage, units, resume, run_id, body, verdicts=True) -> DataFrame | None:
+        """Run one stage over ``units`` (module doc, "Stage runner"):
+        resume, time ``body(pending)``, commit and, with ``verdicts``,
+        return this run's verdicts for the stage."""
+        run_id = run_id or uuid.uuid4().hex[:12]
+        pending = list(units)
+        if resume:
+            done = {
+                r["part"]
+                for r in self.manifest().where(F.col("stage") == stage)
+                .select("part").distinct().collect()
+            }
+            pending = [u for u in pending if str(u) not in done]
+        if pending:
+            t0 = time.monotonic()
+            n_rows_by_part, n_viol_by_part = body(pending)
+            wall_ms = int((time.monotonic() - t0) * 1000)
+        # the verdict frame lists the manifest files: under the lock that
+        # listing never meets a concurrent stage's compaction swap
+        with self._commit_lock:
+            if pending:
+                self._commit(run_id, stage, pending, n_rows_by_part, n_viol_by_part, wall_ms)
+            if verdicts:
+                return self.verdicts().where(
+                    (F.col("stage") == stage) & (F.col("run_id") == run_id)
+                )
+
+    def _parts(self, df: DataFrame, col: str | None = None) -> list:
+        """Distinct partition values of ``df`` (a stage's candidate units)."""
+        return [r[0] for r in df.select(col or self.part_col).distinct().collect()]
+
+    def _replace_counted(self, df, table, part_col, pending, n_expr, bad_expr):
+        """Write ``df`` over the ``pending`` partitions of ``table`` and
+        count it per partition from the same persisted rows (one small
+        aggregate job, no recompute): ``(n_rows_by_part,
+        n_viol_by_part)`` from ``n_expr`` and ``bad_expr``."""
+        df = df.persist()
+        try:
+            self.io.replace_partitions(df, table, part_col, pending)
+            stats = df.groupBy(part_col).agg(
+                n_expr.alias("n"), bad_expr.alias("bad")
+            ).collect()
+        finally:
+            df.unpersist()
+        return (
+            {str(r[0]): int(r["n"] or 0) for r in stats},
+            {str(r[0]): int(r["bad"] or 0) for r in stats},
         )
 
     # --- stage bodies -----------------------------------------------------

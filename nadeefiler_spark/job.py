@@ -18,6 +18,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from functools import reduce
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -184,49 +185,28 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         profile_cfg=default_clips_config(),
         triage_sample_pct=args.triage,
     )
-    verdicts = eng.run(clips, refs=refs, resume=not args.no_resume, run_id=args.run_id)
+    kw = dict(resume=not args.no_resume, run_id=args.run_id)
+    verdicts = [eng.run(clips, refs=refs, **kw)]
     if args.semantic_kb:
-        kb = spark.read.parquet(args.semantic_kb)
-        sem_v = eng.run_semantic(kb, resume=not args.no_resume, run_id=args.run_id)
-        verdicts = verdicts.unionByName(sem_v)
+        verdicts.append(eng.run_semantic(spark.read.parquet(args.semantic_kb), **kw))
     if args.fd_cols is not None:
-        fd_v = eng.run_fd(
-            clips, cols=args.fd_cols or None,
-            resume=not args.no_resume, run_id=args.run_id,
-        )
-        verdicts = verdicts.unionByName(fd_v)
+        verdicts.append(eng.run_fd(clips, cols=args.fd_cols or None, **kw))
     if args.expect:
-        exp_v = eng.run_expectations(
-            clips, resume=not args.no_resume, run_id=args.run_id
-        )
-        verdicts = verdicts.unionByName(exp_v)
+        verdicts.append(eng.run_expectations(clips, **kw))
     if args.discover:
-        disc_v = eng.run_discovery(
-            clips, refs=refs, max_arity=args.discover_arity,
-            resume=not args.no_resume, run_id=args.run_id,
-        )
-        verdicts = verdicts.unionByName(disc_v)
+        verdicts.append(eng.run_discovery(
+            clips, refs=refs, max_arity=args.discover_arity, **kw
+        ))
     if args.content_dedup:
-        cd_v = eng.run_content_dedup(
-            clips, resume=not args.no_resume, run_id=args.run_id
-        )
-        verdicts = verdicts.unionByName(cd_v)
+        verdicts.append(eng.run_content_dedup(clips, **kw))
     if args.vad:
-        vad_v = eng.run_vad(
-            clips, resume=not args.no_resume, run_id=args.run_id
-        )
-        verdicts = verdicts.unionByName(vad_v)
+        verdicts.append(eng.run_vad(clips, **kw))
     if args.probe_health:
-        ph_v = eng.run_probe_stats(
-            clips, resume=not args.no_resume, run_id=args.run_id
-        )
-        verdicts = verdicts.unionByName(ph_v)
+        verdicts.append(eng.run_probe_stats(clips, **kw))
     if args.certify is not None:
-        cert_v = eng.run_certificate(
-            clips, fraction=args.certify, eps=args.certify_eps,
-            resume=not args.no_resume, run_id=args.run_id,
-        )
-        verdicts = verdicts.unionByName(cert_v)
+        verdicts.append(eng.run_certificate(
+            clips, fraction=args.certify, eps=args.certify_eps, **kw
+        ))
         if args.recheck_uncertified:
             bad = eng.uncertified_parts()
             if bad:
@@ -245,39 +225,27 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
                     ),
                     profile_cfg=default_clips_config(),
                 )
-                re_v = full_eng.run(
+                verdicts.append(full_eng.run(
                     clips.where(F.col("part").isin(bad)),
                     refs=refs.where(F.col("part").isin(bad))
                     if refs is not None else None,
                     resume=True,
                     run_id=args.run_id,
-                )
-                verdicts = verdicts.unionByName(re_v)
+                ))
     if args.index:
-        idx_v = eng.run_fp_index(
-            clips, resume=not args.no_resume, run_id=args.run_id
-        )
-        verdicts = verdicts.unionByName(idx_v)
+        verdicts.append(eng.run_fp_index(clips, **kw))
     if args.admit:
         batch = spark.read.parquet(args.admit)
         batch_id = args.admit_id or args.admit.rstrip("/").rsplit("/", 1)[-1]
-        adm_v = eng.run_admission(
-            clips, batch, batch_id=batch_id,
-            resume=not args.no_resume, run_id=args.run_id,
-        )
-        verdicts = verdicts.unionByName(adm_v)
+        verdicts.append(eng.run_admission(clips, batch, batch_id=batch_id, **kw))
     if args.embedding_dedup is not None:
-        ed_v = eng.run_embedding_dedup(
-            clips, threshold=args.embedding_dedup,
-            resume=not args.no_resume, run_id=args.run_id,
-        )
-        verdicts = verdicts.unionByName(ed_v)
+        verdicts.append(eng.run_embedding_dedup(
+            clips, threshold=args.embedding_dedup, **kw
+        ))
     if args.embedding_drift is not None:
-        edr_v = eng.run_embedding_drift(
-            clips, min_cos=args.embedding_drift,
-            resume=not args.no_resume, run_id=args.run_id,
-        )
-        verdicts = verdicts.unionByName(edr_v)
+        verdicts.append(eng.run_embedding_drift(
+            clips, min_cos=args.embedding_drift, **kw
+        ))
     if args.regress_baseline:
         from nadeefiler_spark import profiler as prof
         from nadeefiler_spark.tableio import default_io
@@ -287,24 +255,14 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         base_id = args.regress_id or args.regress_baseline.rstrip("/").rsplit(
             "/", 1
         )[-1]
-        reg_v = eng.run_suite_regression(
-            baseline, baseline_id=base_id,
-            resume=not args.no_resume, run_id=args.run_id,
-        )
-        verdicts = verdicts.unionByName(reg_v)
+        verdicts.append(eng.run_suite_regression(baseline, baseline_id=base_id, **kw))
     # temporal-lineage stages read the manifest history the stages above
     # just committed — keep them last
     if args.incidents is not None:
-        inc_v = eng.run_incident_sessions(
-            gap_s=args.incidents, resume=not args.no_resume,
-            run_id=args.run_id,
-        )
-        verdicts = verdicts.unionByName(inc_v)
+        verdicts.append(eng.run_incident_sessions(gap_s=args.incidents, **kw))
     if args.screen_attribution:
-        sa_v = eng.run_screen_attribution(
-            resume=not args.no_resume, run_id=args.run_id
-        )
-        verdicts = verdicts.unionByName(sa_v)
+        verdicts.append(eng.run_screen_attribution(**kw))
+    verdicts = reduce(lambda a, b: a.unionByName(b), verdicts)
     rows = verdicts.orderBy("part", "stage").collect()
     summary = {
         "partitions": sorted({r["part"] for r in rows}),

@@ -49,6 +49,24 @@ def package_zip() -> str:
     return out
 
 
+def _driver_mem() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM`` when set, otherwise
+    min(24g, 55% of physical RAM).
+
+    A fixed 24g default overcommits small hosts: on a 15 GB machine with
+    no swap the kernel OOM-kills the driver JVM partway through a long
+    session. 55% leaves room for the Python workers and the page cache.
+    """
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):  # no sysconf: keep 24g
+        return "24g"
+    return f"{min(24 * 1024, int(phys_mb * 0.55))}m"
+
+
 def _pretouch_opts() -> str:
     """Opt-in allocation-stability JVM options (SPARK_GRAFT_PRETOUCH=1).
 
@@ -57,7 +75,7 @@ def _pretouch_opts() -> str:
     catastrophic 3-20x slow trials on the shared-kernel host by moving
     heap page-zeroing out of steady state — the exact mechanism the
     round-2 membw probe isolated. Off by default locally because
-    pre-touching a 24 g driver heap costs seconds of startup per
+    pre-touching a multi-GB driver heap costs seconds of startup per
     SparkSession (wrong trade for short-lived test sessions); turn it on
     for long-running local jobs. Cluster executors get the equivalent
     via spark.executor.defaultJavaOptions at submit time (see
@@ -65,8 +83,7 @@ def _pretouch_opts() -> str:
     """
     if os.environ.get("SPARK_GRAFT_PRETOUCH", "") != "1":
         return ""
-    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-    return f"-Xms{heap} -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages "
+    return f"-Xms{_driver_mem()} -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages "
 
 
 def get_spark(
@@ -124,7 +141,7 @@ def get_spark(
         # analog for the sandbox parquet catalog)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_mem())
     )
     if master_env != "external":
         # executors need the same G1 tuning (an executor JVM launches

@@ -204,14 +204,28 @@ def submit(k: int, data_dir: str, n_clips: int, trials: int, env, log: str) -> d
     raise RuntimeError(f"no RESULT in {log}")
 
 
+def gen_data(n_clips: int, dur_min_ms: int, dur_max_ms: int) -> str:
+    """Generate a clips corpus in a fresh temp dir (child process, so the
+    generator's local session never shares a JVM with the cluster)."""
+    data_dir = tempfile.mkdtemp(prefix="scale_data_")
+    code = (
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
+        "from nadeefiler_spark.session import get_spark\n"
+        "from nadeefiler_spark import datagen\n"
+        f"spark = get_spark(app_name='gen', parallelism=32)\n"
+        f"datagen.write_clips(spark, {data_dir!r}, datagen.GenConfig("
+        f"n_rows={n_clips}, dur_min_ms={dur_min_ms}, dur_max_ms={dur_max_ms}))\n"
+    )
+    subprocess.run([sys.executable, "-c", code], check=True,
+                   stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    return data_dir
+
+
 def main() -> None:
     n_clips = int(sys.argv[1]) if len(sys.argv) > 1 else 96000
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     dur_min = int(sys.argv[3]) if len(sys.argv) > 3 else 1000
     dur_max = int(sys.argv[4]) if len(sys.argv) > 4 else 6000
-
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from scaling_bench import gen_data
 
     ks = [int(x) for x in os.environ.get("NDF_KS", "1,4").split(",") if x.strip()]
     data_dir = os.environ.get("NDF_DATA_DIR", "")

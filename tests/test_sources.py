@@ -60,8 +60,11 @@ def test_import_kb_tsv(spark, tmp_path):
 
 def test_pretouch_opts_env_gated(monkeypatch):
     """SPARK_GRAFT_PRETOUCH=1 adds the measured allocation-stability JVM
-    options (round-3 cluster A/B) sized to the driver heap; default off."""
-    from nadeefiler_spark.session import _pretouch_opts
+    options (round-3 cluster A/B) sized to the driver heap; default off.
+    The default heap fits the host."""
+    import os
+
+    from nadeefiler_spark.session import _driver_mem, _pretouch_opts
 
     monkeypatch.delenv("SPARK_GRAFT_PRETOUCH", raising=False)
     assert _pretouch_opts() == ""
@@ -70,6 +73,18 @@ def test_pretouch_opts_env_gated(monkeypatch):
     got = _pretouch_opts()
     assert "-Xms8g" in got and "-XX:+AlwaysPreTouch" in got
     assert "-XX:+UseTransparentHugePages" in got
+
+    # the default heap (and the -Xms sized from it) never exceeds
+    # physical RAM; SPARK_GRAFT_DRIVER_MEM overrides it
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    got = _driver_mem()
+    assert got.endswith("m")
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert 0 < int(got[:-1]) <= min(24 * 1024, phys_mb)
+    assert f"-Xms{got} " in _pretouch_opts()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _driver_mem() == "3g"
+    assert "-Xms3g " in _pretouch_opts()
 
 
 def test_sniff_header_detects_typed_body(spark, tmp_path):
