@@ -121,11 +121,6 @@ Operator → query map (SURVEY §2 ids in brackets):
 - session_concurrency    [pipeline: interval-point range join via
                           time-bin bucketing — hash equi-join on the
                           bin instead of a nested-loop range join]
-- session_concurrency_approx [the at-scale variant: HLL distinct
-                          partners folded into ONE mergeable agg —
-                          sketch row per session through the shuffle
-                          instead of a (session, partner) row; no
-                          oracle (approximate), accuracy pytest-pinned]
 - ind_mine               [profiling: inclusion-dependency discovery —
                           distinct-set containment per candidate pair,
                           the referential rule's mining counterpart]
@@ -984,12 +979,12 @@ ASOF LEFT JOIN (SELECT * FROM events WHERE event_type IN ('click', 'view')) t
 """
 
 
-def _session_matches(spark: SparkSession, sf_dir: str, with_prev: bool = False):
-    """Shared front half of the session-concurrency queries: 12h-gap
-    sessions + the bin-bucketed interval–point containment join against
-    other users' events. Returns (sessions, matches).
+def _session_matches(spark: SparkSession, sf_dir: str):
+    """Front half of the session-concurrency query: 12h-gap sessions +
+    the bin-bucketed interval–point containment join against other
+    users' events. Returns (sessions, matches).
 
-    ``with_prev`` adds ``p_prev_ts`` — each event's same-user
+    Each match carries ``p_prev_ts`` — the event's same-user
     predecessor timestamp (lag over (user, ts, event_id)) — which turns
     exact COUNT DISTINCT partners into a plain conditional count
     downstream (see _q_session_concurrency)."""
@@ -1005,9 +1000,8 @@ def _session_matches(spark: SparkSession, sf_dir: str, with_prev: bool = False):
         F.col("ts").alias("p_ts"),
         F.col("event_id").alias("p_event_id"),
     )
-    if with_prev:
-        w = Window.partitionBy("p_user").orderBy("p_ts", "p_event_id")
-        pts = pts.withColumn("p_prev_ts", F.lag("p_ts").over(w))
+    w = Window.partitionBy("p_user").orderBy("p_ts", "p_event_id")
+    pts = pts.withColumn("p_prev_ts", F.lag("p_ts").over(w))
     m = interval_point_join(iv, pts, "t_start", "t_end", "p_ts", bin_s=86400).where(
         F.col("p_user") != F.col("user")
     )
@@ -1022,7 +1016,7 @@ def _q_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-day bins (a session spans at most ~4 days at sf0.01) so the join
     is a plain hash equi-join on the bin; exact containment filters
     inside buckets; left-join-back keeps zero-concurrency sessions."""
-    iv, m = _session_matches(spark, sf_dir, with_prev=True)
+    iv, m = _session_matches(spark, sf_dir)
     # EXACT distinct partners WITHOUT a distinct exchange — the
     # predecessor trick (classical offline range-distinct reduction):
     # each event carries its same-user predecessor's ts (lag over
@@ -1047,36 +1041,6 @@ def _q_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
                 | (F.col("p_prev_ts") < F.col("t_start"))
             ).cast("bigint")
         ).alias("n_other_users"),
-    )
-    return iv.join(counts, ["user", "session_idx"], "left").select(
-        "user",
-        "session_idx",
-        "n_events",
-        F.coalesce("n_concurrent", F.lit(0)).alias("n_concurrent"),
-        F.coalesce("n_other_users", F.lit(0)).alias("n_other_users"),
-    )
-
-
-def _q_session_concurrency_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL-sketch variant of session concurrency: n_other_users is
-    approx_count_distinct (rsd 2%) folded into the SAME groupBy as the
-    match count — one mergeable aggregation, the shuffle carries one
-    sketch row per session. Historically this was the at-scale
-    production path (the exact query used to pay a ~20M-row (session,
-    partner) distinct exchange at sf0.1); the predecessor-trick rewrite
-    of _q_session_concurrency made the EXACT query equally combinable —
-    and measurably CHEAPER (noop-forced at sf0.1: exact 5.2 s vs ~8 s
-    here; a per-row HLL update costs more than the rewrite's boolean
-    sum + one lag window). Kept because the sketch needs no predecessor
-    column: it composes with pre-aggregated or streamed match feeds
-    where a global per-user lag is unavailable, and sketches merge
-    across incremental runs. n_concurrent stays exact.
-    No DuckDB oracle (approximate values); accuracy vs the exact query
-    is pinned in tests/test_sessions_rollup.py."""
-    iv, m = _session_matches(spark, sf_dir)
-    counts = m.groupBy("user", "session_idx").agg(
-        F.count(F.lit(1)).alias("n_concurrent"),
-        F.approx_count_distinct("p_user", 0.02).alias("n_other_users"),
     )
     return iv.join(counts, ["user", "session_idx"], "left").select(
         "user",
@@ -7131,7 +7095,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "coverage_gaps": _q_coverage_gaps,
         "embedding_drift": _q_embedding_drift,
         "record_outliers": _q_record_outliers,
-        "session_concurrency_approx": _q_session_concurrency_approx,
         "dup_spans": _q_dup_spans,
         "weighted_sample": _q_weighted_sample,
         "column_match": _q_column_match,
@@ -7266,9 +7229,6 @@ def oracle_sql() -> dict[str, str]:
         "column_match": _sql_column_match(),
         "expectation_regressions": _sql_expectation_regressions(),
         "ngram_containment": _sql_ngram_containment(),
-        # session_concurrency_approx: HLL-approximate by design — exact
-        #   twin is the oracled session_concurrency; accuracy bound
-        #   pinned in tests/test_sessions_rollup.py
         # minhash_pairs / simhash_pairs: xxhash64 unavailable in DuckDB —
         #   exact pure-Python pipeline twins in tests/test_hash_twins.py
         # binary_meta / audio_validate: binary audio payloads (pandas-UDF

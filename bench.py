@@ -154,7 +154,6 @@ HEADLINE_QUERIES = (
     "coverage_gaps",
     "embedding_drift",
     "record_outliers",
-    "session_concurrency_approx",
     "dup_spans",
     "ngram_containment",
     "weighted_sample",

@@ -26,9 +26,11 @@ the stage and, if none remain, returns an empty verdict frame without
 running anything. Otherwise it times ``body(pending)``, which writes the
 stage's output table(s) and returns ``(n_rows_by_part, n_viol_by_part)``
 dicts keyed by unit (a missing unit counts 0), commits one manifest row
-per pending unit under the engine's commit lock, and returns this run's
-verdicts for the stage (``run()`` returns one frame for all its stages
-instead). What n_rows and n_violations count is each
+per pending unit under the engine's commit lock, and returns the
+verdicts of exactly the rows it committed, an in-memory relation that no
+later manifest rewrite can break (``run()`` returns the union of its
+stages'). :meth:`ValidationEngine.verdicts` is the manifest-backed
+history of every run. What n_rows and n_violations count is each
 stage's own definition, documented on its ``run_*`` method: clips
 scanned, clips sampled, violating history rows, regressed checks.
 
@@ -47,6 +49,7 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +73,29 @@ VERDICT_SCHEMA = (
 
 VIOLATIONS_SCHEMA = "part string, rule string, clip_id string, detail string, stage string"
 PROFILE_HIST_SCHEMA = "part string, key string, kind string, bin string, count bigint"
+
+
+def _as_verdicts(manifest_rows: DataFrame) -> DataFrame:
+    """The verdict projection (VERDICT_SCHEMA) of manifest rows."""
+    return manifest_rows.select(
+        "part", "stage",
+        (F.col("n_violations") == 0).alias("passed"),
+        "n_rows", "n_violations", "wall_ms", "run_id",
+    )
+
+
+# an empty VERDICT_SCHEMA frame in pure-JVM SQL: collecting
+# createDataFrame([], schema) runs a Python RDD job
+_NO_VERDICTS_SQL = "SELECT {} WHERE false".format(", ".join(
+    "CAST(NULL AS {1}) AS {0}".format(*c.split()) for c in VERDICT_SCHEMA.split(", ")
+))
+
+
+def _sql_str(s) -> str:
+    """``s`` as a Spark SQL string literal. Spark's parser treats
+    backslash as an escape inside string literals (escapedStringLiterals
+    default): escape it FIRST, then quotes (partition values are arbitrary)."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 @dataclass
@@ -116,13 +142,10 @@ class ValidationEngine:
         return self.io.read("manifest", MANIFEST_SCHEMA)
 
     def verdicts(self) -> DataFrame:
-        """Per-(partition, stage) pass/fail — a projection of the manifest
-        (single source of truth; avoids a second commit write per stage)."""
-        return self.manifest().select(
-            "part", "stage",
-            (F.col("n_violations") == 0).alias("passed"),
-            "n_rows", "n_violations", "wall_ms", "run_id",
-        )
+        """Per-(partition, stage) pass/fail history of every run — a
+        projection of the manifest (single source of truth; avoids a
+        second commit write per stage)."""
+        return _as_verdicts(self.manifest())
 
     def violations(self) -> DataFrame:
         return self.io.read("violations", VIOLATIONS_SCHEMA)
@@ -197,7 +220,7 @@ class ValidationEngine:
     ) -> DataFrame:
         """Execute all stages over partitions not yet in the manifest.
 
-        Returns the verdicts DataFrame for this run.
+        Returns the verdicts of the rows this run committed.
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         cfg = self.profile_cfg or prof.ProfileConfig(part_col=self.part_col)
@@ -256,7 +279,7 @@ class ValidationEngine:
 
         rows_cache: dict[str, int] = {}  # filled by the profile stage
 
-        def run_stage(stage: str) -> None:
+        def run_stage(stage: str) -> DataFrame:
             def body(pending):
                 if fail_stage == stage:
                     raise RuntimeError(f"injected failure before stage {stage!r}")
@@ -302,21 +325,20 @@ class ValidationEngine:
                 return n_rows_by_part, n_viol_by_part
 
             # resume=False: every stage's pending set was resolved above
-            # from ONE manifest read; verdicts=False: run() returns one
-            # frame for all its stages (each frame costs a manifest listing)
-            self._stage(stage, pending_of[stage], False, run_id, body, verdicts=False)
+            # from ONE manifest read
+            return self._stage(stage, pending_of[stage], False, run_id, body)
 
         # profile runs first: every later stage may read its outputs
         try:
-            self._run_stages(run_stage, rule_stages, fail_stage)
+            frames = self._run_stages(run_stage, rule_stages, fail_stage)
         finally:
             if decoded is not None:
                 decoded.unpersist()
 
-        return self.verdicts().where(F.col("run_id") == run_id)
+        return reduce(DataFrame.unionByName, frames)
 
-    def _run_stages(self, run_stage, rule_stages, fail_stage) -> None:
-        run_stage("profile")
+    def _run_stages(self, run_stage, rule_stages, fail_stage) -> list[DataFrame]:
+        frames = [run_stage("profile")]
 
         # Later stages CAN run concurrently when their rules have no
         # dependencies on rules in other pending stages. Default: ON for
@@ -340,8 +362,7 @@ class ValidationEngine:
         is_local = self.spark.sparkContext.master.startswith("local")
         concurrent_env = env_val == "1" or (env_val == "" and not is_local)
         if cross_dep or not concurrent_env or fail_stage is not None or len(rule_stages) <= 1:
-            for stage in rule_stages:
-                run_stage(stage)
+            frames += [run_stage(stage) for stage in rule_stages]
         else:
             with ThreadPoolExecutor(max_workers=len(rule_stages)) as pool:
                 futures = {pool.submit(run_stage, s): s for s in rule_stages}
@@ -351,6 +372,8 @@ class ValidationEngine:
                         errs.append((futures[fut], fut.exception()))
                 if errs:
                     raise errs[0][1]
+            frames += [fut.result() for fut in futures]
+        return frames
 
     # --- cascade stage: semantic typing ------------------------------------
     def run_semantic(
@@ -907,12 +930,8 @@ class ValidationEngine:
         parts = [str(p) for p in parts]
         if not parts or not stages:
             return 0
-
-        def q(s: str) -> str:
-            return "'" + str(s).replace("\\", "\\\\").replace("'", "''") + "'"
-
         cond = "part IN ({}) AND stage IN ({})".format(
-            ", ".join(q(p) for p in parts), ", ".join(q(s) for s in stages)
+            ", ".join(map(_sql_str, parts)), ", ".join(map(_sql_str, stages))
         )
         return self.io.delete_matching("manifest", cond, MANIFEST_SCHEMA)
 
@@ -929,11 +948,7 @@ class ValidationEngine:
         )
         if cert.isEmpty():
             return []
-        return [
-            r[self.part_col]
-            for r in cert.where(~F.col("certified"))
-            .select(self.part_col).distinct().collect()
-        ]
+        return self._parts(cert.where(~F.col("certified")))
 
     def run_admission(
         self,
@@ -970,11 +985,8 @@ class ValidationEngine:
                 # prefer the maintained fp_index when it covers every current
                 # corpus partition (freshness is partition-granular — the
                 # engine's resume unit everywhere); otherwise decode inline
-                idx_parts = {
-                    r[0]
-                    for r in self.manifest().where(F.col("stage") == "fp_index")
-                    .select("part").distinct().collect()
-                }
+                idx = self.manifest().where(F.col("stage") == "fp_index")
+                idx_parts = set(self._parts(idx, "part"))
                 cur_parts = {str(p) for p in self._parts(clips)}
                 if cur_parts and cur_parts <= idx_parts:
                     fps = self.fp_index().select("clip_id", "fp")
@@ -1191,17 +1203,12 @@ class ValidationEngine:
                 F.col(self.part_col).cast("string").alias("part"),
                 "check", "column", "value", "lo", "hi", "passed",
             )
-            self.io.replace_partitions(out, "expectation_results", "part", pending)
             # failed-check counts from the (tiny, #parts x #checks) result
-            # table — never a second scan of clips
-            res = self.expectation_results().where(
-                F.col("part").isin([str(p) for p in pending])
+            # rows — never a second scan of clips
+            _, viol = self._replace_counted(
+                out, "expectation_results", "part", pending,
+                F.count(F.lit(1)), F.sum((~F.col("passed")).cast("bigint")),
             )
-            viol = {
-                r["part"]: int(r["c"])
-                for r in res.where(~F.col("passed"))
-                .groupBy("part").agg(F.count(F.lit(1)).alias("c")).collect()
-            }
             return self._rows_by_part(pending), viol
 
         return self._stage("expectations", self._parts(clips), resume, run_id, body)
@@ -1247,14 +1254,11 @@ class ValidationEngine:
                 F.lit(baseline_id).alias("part"),
                 "key", "check", "lo", "hi", "observed_lo", "observed_hi",
             )
-            self.io.replace_partitions(
-                out, "suite_regression_results", "part", [baseline_id]
+            # every result row is a regressed check: n_rows = n_violations
+            return self._replace_counted(
+                out, "suite_regression_results", "part", pending,
+                F.count(F.lit(1)), F.count(F.lit(1)),
             )
-            # counts from the (tiny) result table, never a re-scan
-            n = self.suite_regression_results().where(
-                F.col("part") == baseline_id
-            ).count()
-            return {baseline_id: n}, {baseline_id: n}
 
         return self._stage("suite_regression", [baseline_id], resume, run_id, body)
 
@@ -1286,11 +1290,10 @@ class ValidationEngine:
         bad_ids = viol.select(F.col("clip_id").alias(self.key_col)).distinct()
         out = clips.join(bad_ids, self.key_col, "left_anti")
         if drop_failed_partitions:
-            failed = {
-                r["part"]
-                for r in self.verdicts().where(~F.col("passed"))
-                .select("part").distinct().collect()
-            }
+            latest = self.manifest().groupBy("part", "stage").agg(
+                F.max_by("n_violations", "completed_at").alias("n_violations")
+            )
+            failed = self._parts(latest.where(F.col("n_violations") > 0), "part")
             if failed:
                 out = out.where(
                     ~F.col(self.part_col).cast("string").isin(sorted(failed))
@@ -1371,32 +1374,23 @@ class ValidationEngine:
         )
 
     # --- stage runner -----------------------------------------------------
-    def _stage(self, stage, units, resume, run_id, body, verdicts=True) -> DataFrame | None:
+    def _stage(self, stage, units, resume, run_id, body) -> DataFrame:
         """Run one stage over ``units`` (module doc, "Stage runner"):
-        resume, time ``body(pending)``, commit and, with ``verdicts``,
-        return this run's verdicts for the stage."""
+        resume, time ``body(pending)``, commit and return the committed
+        rows' verdicts."""
         run_id = run_id or uuid.uuid4().hex[:12]
         pending = list(units)
         if resume:
-            done = {
-                r["part"]
-                for r in self.manifest().where(F.col("stage") == stage)
-                .select("part").distinct().collect()
-            }
+            done = set(self._parts(self.manifest().where(F.col("stage") == stage), "part"))
             pending = [u for u in pending if str(u) not in done]
-        if pending:
-            t0 = time.monotonic()
-            n_rows_by_part, n_viol_by_part = body(pending)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-        # the verdict frame lists the manifest files: under the lock that
-        # listing never meets a concurrent stage's compaction swap
+        if not pending:
+            return self.spark.sql(_NO_VERDICTS_SQL)
+        t0 = time.monotonic()
+        n_rows_by_part, n_viol_by_part = body(pending)
+        wall_ms = int((time.monotonic() - t0) * 1000)
         with self._commit_lock:
-            if pending:
-                self._commit(run_id, stage, pending, n_rows_by_part, n_viol_by_part, wall_ms)
-            if verdicts:
-                return self.verdicts().where(
-                    (F.col("stage") == stage) & (F.col("run_id") == run_id)
-                )
+            rows = self._commit(run_id, stage, pending, n_rows_by_part, n_viol_by_part, wall_ms)
+        return _as_verdicts(rows)
 
     def _parts(self, df: DataFrame, col: str | None = None) -> list:
         """Distinct partition values of ``df`` (a stage's candidate units)."""
@@ -1576,15 +1570,10 @@ class ValidationEngine:
         # createDataFrame(local_rows) plan is a 32-slice parallelized
         # Python RDD whose write pays a Python-worker round trip per
         # slice (~4s per commit measured at local[32]); VALUES is free.
-        def q(s: str) -> str:
-            # Spark's parser treats backslash as an escape inside string
-            # literals (escapedStringLiterals default) — escape it FIRST,
-            # then quotes; the engine is generic over partition values.
-            return "'" + str(s).replace("\\", "\\\\").replace("'", "''") + "'"
-
+        # Returned as appended: the caller's verdicts read no file.
         vals = ", ".join(
             "({}, {}, {}, {}, {}, {})".format(
-                q(run_id), q(p), q(stage),
+                _sql_str(run_id), _sql_str(p), _sql_str(stage),
                 int(n_rows_by_part.get(str(p), n_rows_by_part.get(p, 0))),
                 int(n_viol_by_part.get(str(p), n_viol_by_part.get(p, 0))),
                 wall_ms,
@@ -1602,3 +1591,4 @@ class ValidationEngine:
         # without it)
         self.io.append(mdf, "manifest", coalesce=1)
         self.io.compact("manifest", self.manifest_compact_files, MANIFEST_SCHEMA)
+        return mdf

@@ -11,6 +11,11 @@ idempotent and resumable: completed (partition, stage) pairs recorded in
 the checkpoint manifest are skipped unless --no-resume
 (SURVEY §2.8 T3/T5; reference delete-before-write,
 /root/reference/profilers/worker.js:97-100).
+
+Every stage of one job commits under ONE job-wide run id (``--run-id``,
+or a fresh one). The printed summary is keyed by that id: one fresh
+manifest read at the end, so it reports the manifest's final state (an
+audio unit re-checked by ``--recheck-uncertified`` counts once).
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-from functools import reduce
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -142,7 +147,9 @@ def build_parser() -> argparse.ArgumentParser:
                         "recent prior certificate run for its partition "
                         "(screen_attribution table, stage='screen'; "
                         "violations = runs no screen vouched for)")
-    p.add_argument("--run-id", default=None)
+    p.add_argument("--run-id", default=None,
+                   help="run id every stage of this job commits under "
+                        "(default: a fresh one); keys the summary")
     return p
 
 
@@ -185,28 +192,25 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         profile_cfg=default_clips_config(),
         triage_sample_pct=args.triage,
     )
-    kw = dict(resume=not args.no_resume, run_id=args.run_id)
-    verdicts = [eng.run(clips, refs=refs, **kw)]
+    rid = args.run_id or uuid.uuid4().hex[:12]
+    kw = dict(resume=not args.no_resume, run_id=rid)
+    eng.run(clips, refs=refs, **kw)
     if args.semantic_kb:
-        verdicts.append(eng.run_semantic(spark.read.parquet(args.semantic_kb), **kw))
+        eng.run_semantic(spark.read.parquet(args.semantic_kb), **kw)
     if args.fd_cols is not None:
-        verdicts.append(eng.run_fd(clips, cols=args.fd_cols or None, **kw))
+        eng.run_fd(clips, cols=args.fd_cols or None, **kw)
     if args.expect:
-        verdicts.append(eng.run_expectations(clips, **kw))
+        eng.run_expectations(clips, **kw)
     if args.discover:
-        verdicts.append(eng.run_discovery(
-            clips, refs=refs, max_arity=args.discover_arity, **kw
-        ))
+        eng.run_discovery(clips, refs=refs, max_arity=args.discover_arity, **kw)
     if args.content_dedup:
-        verdicts.append(eng.run_content_dedup(clips, **kw))
+        eng.run_content_dedup(clips, **kw)
     if args.vad:
-        verdicts.append(eng.run_vad(clips, **kw))
+        eng.run_vad(clips, **kw)
     if args.probe_health:
-        verdicts.append(eng.run_probe_stats(clips, **kw))
+        eng.run_probe_stats(clips, **kw)
     if args.certify is not None:
-        verdicts.append(eng.run_certificate(
-            clips, fraction=args.certify, eps=args.certify_eps, **kw
-        ))
+        eng.run_certificate(clips, fraction=args.certify, eps=args.certify_eps, **kw)
         if args.recheck_uncertified:
             bad = eng.uncertified_parts()
             if bad:
@@ -225,27 +229,23 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
                     ),
                     profile_cfg=default_clips_config(),
                 )
-                verdicts.append(full_eng.run(
+                full_eng.run(
                     clips.where(F.col("part").isin(bad)),
                     refs=refs.where(F.col("part").isin(bad))
                     if refs is not None else None,
                     resume=True,
-                    run_id=args.run_id,
-                ))
+                    run_id=rid,
+                )
     if args.index:
-        verdicts.append(eng.run_fp_index(clips, **kw))
+        eng.run_fp_index(clips, **kw)
     if args.admit:
         batch = spark.read.parquet(args.admit)
         batch_id = args.admit_id or args.admit.rstrip("/").rsplit("/", 1)[-1]
-        verdicts.append(eng.run_admission(clips, batch, batch_id=batch_id, **kw))
+        eng.run_admission(clips, batch, batch_id=batch_id, **kw)
     if args.embedding_dedup is not None:
-        verdicts.append(eng.run_embedding_dedup(
-            clips, threshold=args.embedding_dedup, **kw
-        ))
+        eng.run_embedding_dedup(clips, threshold=args.embedding_dedup, **kw)
     if args.embedding_drift is not None:
-        verdicts.append(eng.run_embedding_drift(
-            clips, min_cos=args.embedding_drift, **kw
-        ))
+        eng.run_embedding_drift(clips, min_cos=args.embedding_drift, **kw)
     if args.regress_baseline:
         from nadeefiler_spark import profiler as prof
         from nadeefiler_spark.tableio import default_io
@@ -255,15 +255,14 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         base_id = args.regress_id or args.regress_baseline.rstrip("/").rsplit(
             "/", 1
         )[-1]
-        verdicts.append(eng.run_suite_regression(baseline, baseline_id=base_id, **kw))
+        eng.run_suite_regression(baseline, baseline_id=base_id, **kw)
     # temporal-lineage stages read the manifest history the stages above
     # just committed — keep them last
     if args.incidents is not None:
-        verdicts.append(eng.run_incident_sessions(gap_s=args.incidents, **kw))
+        eng.run_incident_sessions(gap_s=args.incidents, **kw)
     if args.screen_attribution:
-        verdicts.append(eng.run_screen_attribution(**kw))
-    verdicts = reduce(lambda a, b: a.unionByName(b), verdicts)
-    rows = verdicts.orderBy("part", "stage").collect()
+        eng.run_screen_attribution(**kw)
+    rows = eng.verdicts().where(F.col("run_id") == rid).collect()
     summary = {
         "partitions": sorted({r["part"] for r in rows}),
         "stages": sorted({r["stage"] for r in rows}),

@@ -10,11 +10,37 @@ audio rules.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+
+def _sources(pkg_dir: str) -> list[tuple[str, str]]:
+    """(path, archive name) of every ``.py`` file under ``pkg_dir``,
+    sorted by archive name."""
+    out = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                out.append((full, os.path.relpath(full, os.path.dirname(pkg_dir))))
+    return sorted(out, key=lambda s: s[1])
+
+
+def _zip_path(sources: list[tuple[str, str]]) -> str:
+    """``$TMPDIR`` zip path keyed by a digest of the sources' names and
+    bytes: checkouts with different sources never share a zip."""
+    h = hashlib.sha256()
+    for full, rel in sources:
+        with open(full, "rb") as f:
+            h.update(rel.encode() + b"\0" + f.read() + b"\0")
+    name = f"nadeefiler_spark_pyfiles-{h.hexdigest()[:16]}.zip"
+    return os.path.join(tempfile.gettempdir(), name)
 
 
 def package_zip() -> str:
@@ -26,7 +52,6 @@ def package_zip() -> str:
     workers can import the package regardless of driver cwd.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "nadeefiler_spark_pyfiles.zip")
     if not os.path.isdir(pkg_dir):
         # imported from a zip (spark-submit --py-files): the package IS
         # the artifact — walking the zipimport path would silently
@@ -34,17 +59,16 @@ def package_zip() -> str:
         zip_path = pkg_dir
         while zip_path and not os.path.isfile(zip_path):
             zip_path = os.path.dirname(zip_path)
-        return zip_path or out
-    tmp = out + ".tmp"
+        return zip_path
+    sources = _sources(pkg_dir)
+    out = _zip_path(sources)
+    if os.path.isfile(out):  # same digest: same bytes (fixed entry dates)
+        return out
+    tmp = f"{out}.{os.getpid()}.tmp"  # per process: concurrent builders never share it
     with zipfile.ZipFile(tmp, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
+        for full, rel in sources:
+            with open(full, "rb") as f:
+                zf.writestr(zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0)), f.read())
     os.replace(tmp, out)  # atomic: concurrent sessions never see a partial zip
     return out
 

@@ -205,3 +205,64 @@ def test_job_recheck_uncertified_escalates(spark, clips_dir, tmp_path):
     assert {r["part"] for r in av.select("part").distinct().collect()} <= bad
     assert av.count() > 0
     assert not summary["passed"]
+
+
+def _job_verdicts(spark, out, run_id):
+    from nadeefiler_spark.engine import ValidationEngine
+
+    return ValidationEngine(spark, out).verdicts().where(
+        F.col("run_id") == run_id
+    ).collect()
+
+
+def test_job_recheck_with_audio_on_rewrites_manifest_safely(spark, clips_dir, tmp_path):
+    """--recheck-uncertified with the audio stage ON: invalidate swaps
+    the manifest after the main run committed its audio units, and the
+    job still completes; each re-checked audio unit counts once."""
+    from nadeefiler_spark import job
+
+    out = str(tmp_path / "out")
+    summary = job.main(
+        [
+            "--clips", f"{clips_dir}/clips",
+            "--refs", f"{clips_dir}/transcript_refs",
+            "--out", out,
+            "--no-drift",
+            "--certify", "0.2", "--certify-eps", "0.005",
+            "--recheck-uncertified", "--run-id", "rc",
+        ],
+        spark=spark,
+    )
+    rows = _job_verdicts(spark, out, "rc")
+    units = [(r["part"], r["stage"]) for r in rows]
+    assert len(units) == len(set(units))
+    assert {s for _, s in units} == {"profile", "constraints", "audio", "certificate"}
+    assert summary["n_violations"] == sum(r["n_violations"] for r in rows)
+    assert not summary["passed"]
+
+
+def test_job_summary_is_the_manifest_under_the_run_id(spark, clips_dir, tmp_path):
+    """With --run-id, the summary counts each (part, stage) once: it is
+    exactly the manifest rows under that id, including the stages the
+    --recheck-uncertified engine commits after the cascade stages."""
+    from nadeefiler_spark import job
+
+    out = str(tmp_path / "out")
+    summary = job.main(
+        [
+            "--clips", f"{clips_dir}/clips",
+            "--out", out,
+            "--no-audio", "--no-drift", "--probe-health",
+            "--certify", "0.2", "--certify-eps", "0.005",
+            "--recheck-uncertified", "--run-id", "fixed",
+        ],
+        spark=spark,
+    )
+    rows = _job_verdicts(spark, out, "fixed")
+    units = [(r["part"], r["stage"]) for r in rows]
+    assert len(units) == len(set(units))
+    assert summary["stages"] == sorted({s for _, s in units}) == [
+        "audio", "certificate", "constraints", "probe", "profile"
+    ]
+    assert summary["partitions"] == sorted({p for p, _ in units})
+    assert summary["n_violations"] == sum(r["n_violations"] for r in rows) > 0

@@ -283,3 +283,59 @@ def test_clean_clips_validated_corpus(spark, clips_dir, run_dir):
     assert failed_parts
     left_parts = {r["part"] for r in gated.select("part").distinct().collect()}
     assert left_parts.isdisjoint(failed_parts)
+
+
+def test_run_verdicts_are_the_committed_rows(spark, tmp_path):
+    """run() returns the rows it committed, not a view over the manifest
+    files: the frame still collects after later stages compact the
+    manifest, and a second run under the same run id returns only its
+    own stages."""
+    from nadeefiler_spark.datagen import GenConfig
+
+    clips = datagen.clips_df(
+        spark, GenConfig(n_rows=400, seed=7, dur_min_ms=40, dur_max_ms=120)
+    )
+    eng = ValidationEngine(
+        spark, str(tmp_path / "out"),
+        rules=default_clip_rules(with_refs=False, with_audio=False, with_drift=False),
+        profile_cfg=default_clips_config(),
+        manifest_compact_files=2,
+    )
+    parts = {r["part"] for r in clips.select("part").distinct().collect()}
+    want = {(p, s) for p in parts for s in ("profile", "constraints")}
+    v = eng.run(clips, run_id="fixed")
+    # two more commits push the manifest past 2 files: compaction swaps
+    # out the part files a lazy manifest view would have listed
+    eng.run_probe_stats(clips, run_id="fixed")
+    eng.run_fd(clips, run_id="fixed")
+    rows = v.collect()
+    assert sorted((r["part"], r["stage"]) for r in rows) == sorted(want)
+    again = eng.run(clips, resume=False, run_id="fixed").collect()
+    assert sorted((r["part"], r["stage"]) for r in again) == sorted(want)
+
+
+def test_drop_failed_partitions_uses_latest_verdict(spark, tmp_path):
+    """A partition whose latest (part, stage) row passes is kept even if
+    an earlier run of that stage failed; one whose latest row fails is
+    dropped."""
+    from datetime import datetime
+
+    from nadeefiler_spark.engine import MANIFEST_SCHEMA
+
+    eng = ValidationEngine(spark, str(tmp_path / "out"), rules=[])
+    rows = [
+        ("r1", "p1", "constraints", "2026-01-01T00:00:00", 1, 2),
+        ("r2", "p1", "constraints", "2026-01-02T00:00:00", 1, 0),
+        ("r1", "p2", "constraints", "2026-01-01T00:00:00", 1, 0),
+        ("r2", "p2", "constraints", "2026-01-02T00:00:00", 1, 3),
+        ("r2", "p1", "profile", "2026-01-02T00:00:00", 1, 0),
+    ]
+    eng.io.append(spark.createDataFrame(
+        [(r[0], r[1], r[2], datetime.fromisoformat(r[3]), r[4], r[5], 0) for r in rows],
+        schema=MANIFEST_SCHEMA,
+    ), "manifest", coalesce=1)
+    clips = spark.createDataFrame(
+        [("a", "p1"), ("b", "p2")], "clip_id string, part string"
+    )
+    gated = eng.clean_clips(clips, drop_failed_partitions=True)
+    assert {r["part"] for r in gated.collect()} == {"p1"}

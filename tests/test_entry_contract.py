@@ -71,9 +71,6 @@ def test_queries_and_oracles_align():
         "audio_qc_corpus", "clip_admission_corpus",
         "transcript_conflicts_corpus",
         "audio_vad_corpus", "audio_loudness_corpus", "audio_bandwidth",
-        # HLL-approximate by design; exact twin session_concurrency IS
-        # oracled, accuracy bound pinned in test_sessions_rollup.py
-        "session_concurrency_approx",
         # binary datagen input; exact row_spec twin in
         # test_headerprobe.py, and the probe's byte arithmetic IS
         # DuckDB-oracled via header_probe_sql / probe_stats_sql

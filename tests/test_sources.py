@@ -149,3 +149,21 @@ def test_read_jsonl_all_good_and_all_bad(spark, tmp_path):
     (q / "c.jsonl").write_text("}{\nnope\n")
     good, bad = read_jsonl(spark, str(q), "doc_id bigint, text string")
     assert good.count() == 0 and bad.count() == 2
+
+
+def test_package_zip_keyed_by_source_digest(tmp_path):
+    """The executor zip's name follows the package sources: two
+    checkouts with different sources never share one zip path."""
+    import os
+
+    from nadeefiler_spark import session
+
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "a.py").write_text("x = 1\n")
+    before = session._zip_path(session._sources(str(pkg)))
+    assert session._zip_path(session._sources(str(pkg))) == before
+    (pkg / "a.py").write_text("x = 2\n")
+    assert session._zip_path(session._sources(str(pkg))) != before
+    real = os.path.dirname(os.path.abspath(session.__file__))
+    assert session.package_zip() == session._zip_path(session._sources(real))
