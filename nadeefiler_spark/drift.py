@@ -1,14 +1,20 @@
-"""Distribution-drift tests between partition histograms: PSI and KS.
+"""Distribution-drift tests between partition histograms: PSI, KS,
+Wasserstein-1 and chi-square.
 
 north_star: "KS/PSI distribution-drift tests between partitions".
 The reference has no drift math — its nearest analog is the dBoost
 outlier profiler consuming per-column histograms
-(/root/reference/profilers/outliers/index.js:16-18, SURVEY §2.3 A9);
+(reference profilers/outliers/index.js:16-18, SURVEY §2.3 A9);
 this module is the engine-native generalization, computed as pure
-DataFrame math over the (tiny) profile_hist table (SURVEY §4 item 3):
+DataFrame math over the (tiny) profile_hist table (SURVEY §4 item 3).
+Every statistic reads one aligned grid (:func:`_aligned`): each
+(part, key, kind) × every bin either side has, zero-filled, with
+per-part totals and numeric-order ECDFs:
 
 - PSI  = sum_bins (p - q) * ln(p / q), with zero-bin smoothing
 - KS D = max_bins |ECDF_p - ECDF_q| over bins ordered numerically
+- W1   = bin_width * sum_bins |ECDF_p - ECDF_q| (bucket kind only)
+- X²   = pooled two-sample chi-square over the raw counts
 
 Scale notes: inputs are aggregated histograms — rows ∝ #parts × #cols ×
 #bins, never ∝ data rows — so every join/window here is on sketch-sized
@@ -20,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .rules.base import Rule, RuleContext
@@ -33,53 +39,68 @@ def global_baseline(hist: DataFrame) -> DataFrame:
     return hist.groupBy("key", "kind", "bin").agg(F.sum("count").alias("count"))
 
 
+def _aligned(hist: DataFrame, baseline: DataFrame) -> DataFrame:
+    """The grid every drift statistic reads: per (part, key, kind), one
+    row for each bin the baseline or ANY part has for that (key, kind),
+    so a bin missing on either side still appears for that part.
+
+    `hist`: (part, key, kind, bin, count); `baseline`: (key, kind, bin,
+    count). Returns (part, key, kind, bin, c_p, c_q, cdf_p, cdf_q, n_p,
+    n_q): counts zero-filled, n_* the raw totals over the part's
+    grid, cdf_* the ECDFs over numerically-ordered bins (string bins
+    order lexically — meaningful KS/W1 applies to 'bucket' kind; PSI
+    covers categorical). Plan: one distinct × distinct grid join, two
+    left joins, one total window and one ordered window; a caller that
+    reads no cdf_* column has the ordered window pruned away.
+    """
+    p = hist.select("part", "key", "kind", "bin", F.col("count").alias("c_p"))
+    q = baseline.select("key", "kind", "bin", F.col("count").alias("c_q"))
+    part_keys = p.select("part", "key", "kind").distinct()
+    all_bins = q.select("key", "kind", "bin").union(
+        p.select("key", "kind", "bin")
+    ).distinct()
+    joined = (
+        part_keys.join(all_bins, ["key", "kind"])
+        .join(p, ["part", "key", "kind", "bin"], "left")
+        .join(q, ["key", "kind", "bin"], "left")
+        .fillna(0, subset=["c_p", "c_q"])
+    )
+    tot = Window.partitionBy("part", "key", "kind")
+    order = tot.orderBy(
+        F.col("bin").try_cast("double").asc_nulls_last(), F.col("bin")
+    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    n_p, n_q = F.sum("c_p").over(tot), F.sum("c_q").over(tot)
+    # ECDFs first: Spark stacks windows in first-use order, and the
+    # ordered window's sort then also serves the total window
+    return joined.select(
+        "part", "key", "kind", "bin", "c_p", "c_q",
+        (F.sum("c_p").over(order) / F.greatest(n_p, F.lit(1))).alias("cdf_p"),
+        (F.sum("c_q").over(order) / F.greatest(n_q, F.lit(1))).alias("cdf_q"),
+        n_p.alias("n_p"), n_q.alias("n_q"),
+    )
+
+
+def _smoothed(count: str, total: str) -> Column:
+    """``count / total`` floored at EPS (zero-bin smoothing; a zero
+    total counts as 1). A function, not a module constant: building a
+    Column needs an active session, and this module is imported first."""
+    return F.greatest(F.col(count) / F.greatest(F.col(total), F.lit(1)), F.lit(EPS))
+
+
+def _psi_term(p: Column, q: Column) -> Column:
+    """One bin's PSI contribution (p - q)·ln(p/q)."""
+    return (p - q) * F.log(p / q)
+
+
 def drift_metrics(hist: DataFrame, baseline: DataFrame) -> DataFrame:
     """Per (part, key): PSI and KS-D of the part's histogram vs baseline.
 
     `hist`: (part, key, kind, bin, count); `baseline`: (key, kind, bin,
     count). Bins absent on one side get smoothed probability EPS.
     """
-    p = hist.select("part", "key", "kind", "bin", F.col("count").alias("c_p"))
-    q = baseline.select("key", "kind", "bin", F.col("count").alias("c_q"))
-
-    # align bins per (part, key): full outer on bin within each part×key.
-    # Build the (part, key) × bin frame first so a bin missing on either
-    # side still appears for that part.
-    part_keys = p.select("part", "key", "kind").distinct()
-    all_bins = q.select("key", "kind", "bin").union(
-        p.select("key", "kind", "bin")
-    ).distinct()
-    grid = part_keys.join(all_bins, ["key", "kind"])
-    joined = (
-        grid.join(p, ["part", "key", "kind", "bin"], "left")
-        .join(q, ["key", "kind", "bin"], "left")
-        .fillna(0, subset=["c_p", "c_q"])
-    )
-
-    tot = Window.partitionBy("part", "key", "kind")
-    probs = joined.select(
-        "part", "key", "kind", "bin", "c_p", "c_q",
-        (F.col("c_p") / F.greatest(F.sum("c_p").over(tot), F.lit(1))).alias("pp"),
-        (F.col("c_q") / F.greatest(F.sum("c_q").over(tot), F.lit(1))).alias("qq"),
-    ).select(
-        "part", "key", "kind", "bin", "c_p", "c_q",
-        F.greatest(F.col("pp"), F.lit(EPS)).alias("p"),
-        F.greatest(F.col("qq"), F.lit(EPS)).alias("q"),
-    )
-
-    # ECDF over numerically-ordered bins (string bins order lexically —
-    # meaningful KS applies to 'bucket' kind; PSI covers categorical)
-    order = Window.partitionBy("part", "key", "kind").orderBy(
-        F.col("bin").try_cast("double").asc_nulls_last(), F.col("bin")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    with_cdf = probs.select(
-        "*",
-        (F.sum("c_p").over(order) / F.greatest(F.sum("c_p").over(tot), F.lit(1))).alias("cdf_p"),
-        (F.sum("c_q").over(order) / F.greatest(F.sum("c_q").over(tot), F.lit(1))).alias("cdf_q"),
-    )
-
-    return with_cdf.groupBy("part", "key", "kind").agg(
-        F.sum((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))).alias("psi"),
+    p, q = _smoothed("c_p", "n_p"), _smoothed("c_q", "n_q")
+    return _aligned(hist, baseline).groupBy("part", "key", "kind").agg(
+        F.sum(_psi_term(p, q)).alias("psi"),
         F.max(F.abs(F.col("cdf_p") - F.col("cdf_q"))).alias("ks_d"),
     )
 
@@ -102,35 +123,16 @@ def drift_explain(
     positive count — a part with NO drift simply shows its k least
     conforming bins with near-zero contributions.
 
-    Plan: the drift_metrics grid-align join + one row_number window
+    Plan: the aligned grid (:func:`_aligned`) + one row_number window
     over histogram rows — rows ∝ parts x bins, sketch-sized.
     """
-    p = hist.select("part", "key", "kind", "bin", F.col("count").alias("c_p"))
-    q = baseline.select("key", "kind", "bin", F.col("count").alias("c_q"))
-    part_keys = p.select("part", "key", "kind").distinct()
-    all_bins = q.select("key", "kind", "bin").union(
-        p.select("key", "kind", "bin")
-    ).distinct()
-    grid = part_keys.join(all_bins, ["key", "kind"])
-    joined = (
-        grid.join(p, ["part", "key", "kind", "bin"], "left")
-        .join(q, ["key", "kind", "bin"], "left")
-        .fillna(0, subset=["c_p", "c_q"])
-    )
-    tot = Window.partitionBy("part", "key", "kind")
-    probs = joined.select(
+    probs = _aligned(hist, baseline).select(
         "part", "key", "kind", "bin", "c_p", "c_q",
-        F.greatest(
-            F.col("c_p") / F.greatest(F.sum("c_p").over(tot), F.lit(1)),
-            F.lit(EPS),
-        ).alias("p"),
-        F.greatest(
-            F.col("c_q") / F.greatest(F.sum("c_q").over(tot), F.lit(1)),
-            F.lit(EPS),
-        ).alias("q"),
+        _smoothed("c_p", "n_p").alias("p"),
+        _smoothed("c_q", "n_q").alias("q"),
     )
     contrib = probs.withColumn(
-        "psi_contrib", (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
+        "psi_contrib", _psi_term(F.col("p"), F.col("q"))
     )
     rk = Window.partitionBy("part", "key", "kind").orderBy(
         F.col("psi_contrib").desc(), F.col("bin")
@@ -167,45 +169,20 @@ def wasserstein_drift(
 
     Same input shape and plan as drift_metrics: ``hist`` (part, key,
     kind, bin, count), ``baseline`` (key, kind, bin, count); the
-    grid-align join, one ordered window for the CDFs, one
-    groupBy(part, key) — rows ∝ parts x bins, sketch-sized, the corpus
-    scan already happened in the profile stage.
+    aligned grid (:func:`_aligned`) with its ordered CDF window, then
+    one groupBy(part, key) — rows ∝ parts x bins, sketch-sized, the
+    corpus scan already happened in the profile stage.
 
     No reference analog (beyond-reference operator; the reference's
     nearest is the dBoost histogram consumer,
-    /root/reference/profilers/outliers/index.js:16-18).
+    profilers/outliers/index.js:16-18).
     """
-    p = (
-        hist.where(F.col("kind") == "bucket")
-        .select("part", "key", "kind", "bin", F.col("count").alias("c_p"))
-    )
-    q = (
-        baseline.where(F.col("kind") == "bucket")
-        .select("key", "kind", "bin", F.col("count").alias("c_q"))
-    )
-    part_keys = p.select("part", "key", "kind").distinct()
-    all_bins = q.select("key", "kind", "bin").union(
-        p.select("key", "kind", "bin")
-    ).distinct()
-    grid = part_keys.join(all_bins, ["key", "kind"])
-    joined = (
-        grid.join(p, ["part", "key", "kind", "bin"], "left")
-        .join(q, ["key", "kind", "bin"], "left")
-        .fillna(0, subset=["c_p", "c_q"])
-    )
-    tot = Window.partitionBy("part", "key", "kind")
-    order = Window.partitionBy("part", "key", "kind").orderBy(
-        F.col("bin").try_cast("double").asc_nulls_last(), F.col("bin")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    with_cdf = joined.select(
-        "part", "key", "kind",
-        (
-            F.sum("c_p").over(order) / F.greatest(F.sum("c_p").over(tot), F.lit(1))
-            - F.sum("c_q").over(order) / F.greatest(F.sum("c_q").over(tot), F.lit(1))
-        ).alias("cdf_gap"),
-    )
-    return with_cdf.groupBy("part", "key", "kind").agg(
-        F.round(F.lit(bin_width) * F.sum(F.abs(F.col("cdf_gap"))), 6).alias("w1"),
+    bucket = F.col("kind") == "bucket"
+    g = _aligned(hist.where(bucket), baseline.where(bucket))
+    return g.groupBy("part", "key", "kind").agg(
+        F.round(
+            F.lit(bin_width) * F.sum(F.abs(F.col("cdf_p") - F.col("cdf_q"))), 6
+        ).alias("w1"),
     )
 
 
@@ -222,41 +199,22 @@ def chi2_drift(hist: DataFrame, baseline: DataFrame) -> DataFrame:
     absent on one side enter as 0 (no smoothing — chi-square handles
     zeros in ONE sample; a bin absent from BOTH never appears).
     Exact rational arithmetic until the final division, so the SQL
-    oracle reproduces it to rounding. Plan shape: the same
-    grid-align join as drift_metrics, then one groupBy(part, key) —
+    oracle reproduces it to rounding. Plan shape: the aligned grid
+    (:func:`_aligned`, no ordered window), then one groupBy(part, key) —
     rows ∝ parts × bins, partial aggregation throughout.
     """
-    p = hist.select("part", "key", "kind", "bin", F.col("count").alias("c_p"))
-    q = baseline.select("key", "kind", "bin", F.col("count").alias("c_q"))
-    part_keys = p.select("part", "key", "kind").distinct()
-    all_bins = q.select("key", "kind", "bin").union(
-        p.select("key", "kind", "bin")
-    ).distinct()
-    grid = part_keys.join(all_bins, ["key", "kind"])
-    joined = (
-        grid.join(p, ["part", "key", "kind", "bin"], "left")
-        .join(q, ["key", "kind", "bin"], "left")
-        .fillna(0, subset=["c_p", "c_q"])
-    )
-    tot = Window.partitionBy("part", "key", "kind")
-    n_p, n_q = F.sum("c_p").over(tot), F.sum("c_q").over(tot)
-    pool = (F.col("c_p") + F.col("c_q")) / F.greatest(n_p + n_q, F.lit(1))
+    c_p, c_q, n_p, n_q = (F.col(c) for c in ("c_p", "c_q", "n_p", "n_q"))
+    pool = (c_p + c_q) / F.greatest(n_p + n_q, F.lit(1))
     e_p, e_q = n_p * pool, n_q * pool
     term = (
-        F.when(e_p > 0, (F.col("c_p") - e_p) ** 2 / e_p).otherwise(0.0)
-        + F.when(e_q > 0, (F.col("c_q") - e_q) ** 2 / e_q).otherwise(0.0)
+        F.when(e_p > 0, (c_p - e_p) ** 2 / e_p).otherwise(0.0)
+        + F.when(e_q > 0, (c_q - e_q) ** 2 / e_q).otherwise(0.0)
     )
-    contrib = joined.select(
-        "part", "key", "kind",
-        term.alias("term"),
-        ((F.col("c_p") + F.col("c_q")) > 0).cast("int").alias("live_bin"),
-        n_p.alias("n_p"), n_q.alias("n_q"),
-    )
-    return contrib.groupBy("part", "key", "kind").agg(
-        F.round(F.sum("term"), 6).alias("chi2"),
-        (F.sum("live_bin") - 1).cast("bigint").alias("dof"),
-        F.max("n_p").cast("bigint").alias("n_p"),
-        F.max("n_q").cast("bigint").alias("n_q"),
+    return _aligned(hist, baseline).groupBy("part", "key", "kind").agg(
+        F.round(F.sum(term), 6).alias("chi2"),
+        (F.sum(((c_p + c_q) > 0).cast("int")) - 1).cast("bigint").alias("dof"),
+        F.max(n_p).cast("bigint").alias("n_p"),
+        F.max(n_q).cast("bigint").alias("n_q"),
     )
 
 

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from . import profiler as prof
 from .rules.base import Rule, RuleContext, topo_sort
 from .rules.audio_rules import decode_facts
-from .tableio import default_io
+from .tableio import default_io, empty_frame
 
 STAGE_ORDER = ("profile", "constraints", "audio", "drift", "semantic")
 
@@ -82,13 +82,6 @@ def _as_verdicts(manifest_rows: DataFrame) -> DataFrame:
         (F.col("n_violations") == 0).alias("passed"),
         "n_rows", "n_violations", "wall_ms", "run_id",
     )
-
-
-# an empty VERDICT_SCHEMA frame in pure-JVM SQL: collecting
-# createDataFrame([], schema) runs a Python RDD job
-_NO_VERDICTS_SQL = "SELECT {} WHERE false".format(", ".join(
-    "CAST(NULL AS {1}) AS {0}".format(*c.split()) for c in VERDICT_SCHEMA.split(", ")
-))
 
 
 def _sql_str(s) -> str:
@@ -724,7 +717,10 @@ class ValidationEngine:
                 F.count(F.lit(1)).alias("n_sampled"),
                 F.sum(viol.cast("bigint")).alias("n_viol"),
             )
-            parts_df = self.spark.createDataFrame([(str(p),) for p in pending], "part string")
+            # pure-JVM VALUES relation, as in _commit: no Python RDD job
+            parts_df = self.spark.sql("SELECT col1 AS part FROM VALUES " + ", ".join(
+                f"({_sql_str(p)})" for p in pending
+            ))
             agg = parts_df.join(agg, ["part"], "left").fillna(
                 0, subset=["n_sampled", "n_viol"]
             )
@@ -1384,7 +1380,7 @@ class ValidationEngine:
             done = set(self._parts(self.manifest().where(F.col("stage") == stage), "part"))
             pending = [u for u in pending if str(u) not in done]
         if not pending:
-            return self.spark.sql(_NO_VERDICTS_SQL)
+            return empty_frame(self.spark, VERDICT_SCHEMA)
         t0 = time.monotonic()
         n_rows_by_part, n_viol_by_part = body(pending)
         wall_ms = int((time.monotonic() - t0) * 1000)

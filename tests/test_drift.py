@@ -1,6 +1,7 @@
 """KS/PSI drift math vs numpy/scipy-style references computed by hand."""
 
 import math
+import random
 
 import numpy as np
 import pytest
@@ -20,7 +21,8 @@ def _baseline_df(spark, rows):
 
 def _psi_py(p_counts, q_counts, eps=drift.EPS):
     bins = sorted(set(p_counts) | set(q_counts))
-    tp, tq = sum(p_counts.values()), sum(q_counts.values())
+    # totals floored at 1, as in drift.py, so an all-zero side is defined
+    tp, tq = max(sum(p_counts.values()), 1), max(sum(q_counts.values()), 1)
     psi = 0.0
     for b in bins:
         p = max(p_counts.get(b, 0) / tp, eps)
@@ -29,9 +31,18 @@ def _psi_py(p_counts, q_counts, eps=drift.EPS):
     return psi
 
 
+def _bin_order(b):
+    """drift.py's ECDF order: numeric bins by value, then the rest, ties
+    broken by the bin string."""
+    try:
+        return (0, float(b), b)
+    except ValueError:
+        return (1, 0.0, b)
+
+
 def _ks_py(p_counts, q_counts):
-    bins = sorted(set(p_counts) | set(q_counts), key=float)
-    tp, tq = sum(p_counts.values()), sum(q_counts.values())
+    bins = sorted(set(p_counts) | set(q_counts), key=_bin_order)
+    tp, tq = max(sum(p_counts.values()), 1), max(sum(q_counts.values()), 1)
     cp = cq = 0.0
     d = 0.0
     for b in bins:
@@ -357,6 +368,135 @@ def test_drift_explain_k_truncates(spark):
     # no drift: still returns k rows, near-zero contributions
     assert len(rows) == 2
     assert all(abs(r["psi_contrib"]) < 1e-9 for r in rows)
+
+
+def _drift_family_cases(seed=9):
+    """Seeded-random drift-family cases, one key each: key -> (kind,
+    {part: {bin: count}}, {bin: count} external baseline)."""
+    rng = random.Random(seed)
+    num = [str(100 * i) for i in range(10)]
+
+    def sample(bins, lo=0, hi=60, keep=0.7):
+        # bins missing from a part: each kept with probability ``keep``
+        return {b: rng.randint(lo, hi) for b in bins if rng.random() < keep}
+
+    cases = {
+        # numeric bucket bins, bins missing per part, and baseline bins
+        # ("1000", "1100") that no part has
+        "num_missing": ("bucket", {f"p{i}": sample(num) for i in range(4)},
+                        {b: rng.randint(1, 50) for b in num + ["1000", "1100"]}),
+        # string bins of the value kind; "zz" only in the baseline
+        "str_value": ("value", {f"p{i}": sample("abcdefgh") for i in range(3)},
+                      {**sample("abcdefgh", lo=1, keep=0.8), "zz": 7}),
+        # numeric value bins whose numeric order is not their string order
+        "num_value": ("value",
+                      {f"p{i}": sample(["8000", "16000", "22050", "44100", "96000"])
+                       for i in range(3)},
+                      {"8000": 10, "16000": 40, "44100": 25}),
+        # an all-zero part side next to ordinary parts
+        "zero_part": ("bucket",
+                      {"p0": {b: 0 for b in num[:5]}, "p1": sample(num[:5], lo=1),
+                       "p2": sample(num[:6], lo=1)},
+                      {b: rng.randint(1, 30) for b in num[:5]}),
+        # an all-zero baseline side
+        "zero_base": ("bucket", {f"p{i}": sample(num[:4], lo=1) for i in range(3)},
+                      {b: 0 for b in num[:4]}),
+        # tied per-bin contributions: x and y have equal (p, q)
+        "ties": ("value",
+                 {"p0": {"x": 10, "y": 10, "z": 5}, "p1": {"x": 3, "y": 3, "w": 9},
+                  "p2": {"v": 4}},
+                 {"x": 5, "y": 5, "z": 20, "u": 2}),
+    }
+    return cases
+
+
+def _ref_grid(cases):
+    """The aligned grid drift.py builds: every part of a key sees the
+    union of the baseline's bins and all that key's parts' bins."""
+    for key, (kind, parts, base) in cases.items():
+        bins = set(base).union(*parts.values())
+        for part, counts in parts.items():
+            yield (part, key, kind,
+                   {b: counts.get(b, 0) for b in bins}, {b: base.get(b, 0) for b in bins})
+
+
+def test_drift_family_matches_python_reference(spark):
+    """PSI, KS-D, drift_explain, W1 and chi-square over the aligned grid
+    against pure-Python twins, all cases in one hist and one baseline."""
+    cases = _drift_family_cases()
+    hist = _hist_df(spark, [
+        (part, key, kind, b, c)
+        for key, (kind, parts, _) in cases.items()
+        for part, counts in parts.items() for b, c in counts.items()
+    ])
+    base = _baseline_df(spark, [
+        (key, kind, b, c) for key, (kind, _, counts) in cases.items()
+        for b, c in counts.items()
+    ])
+    by_pk = lambda rows: {(r["part"], r["key"]): r for r in rows}  # noqa: E731
+    grid = list(_ref_grid(cases))
+    width = 100.0
+    metrics = by_pk(drift.drift_metrics(hist, base).collect())
+    chi2 = by_pk(drift.chi2_drift(hist, base).collect())
+    w1 = by_pk(drift.wasserstein_drift(hist, base, bin_width=width).collect())
+    explain = {}
+    for r in drift.drift_explain(hist, base, k=20).collect():
+        explain.setdefault((r["part"], r["key"]), []).append(r)
+    assert set(metrics) == set(chi2) == set(explain) == {(g[0], g[1]) for g in grid}
+    assert set(w1) == {(g[0], g[1]) for g in grid if g[2] == "bucket"}
+
+    for part, key, kind, cp, cq in grid:
+        psi = _psi_py(cp, cq)
+        m = metrics[(part, key)]
+        assert m["kind"] == kind
+        assert m["psi"] == pytest.approx(psi, rel=1e-9, abs=1e-12)
+        assert m["ks_d"] == pytest.approx(_ks_py(cp, cq), rel=1e-9, abs=1e-12)
+
+        # drift_explain: every grid bin ranked by contribution DESC, ties
+        # by bin; contributions sum to the PSI
+        tp, tq = max(sum(cp.values()), 1), max(sum(cq.values()), 1)
+        ref = {}
+        for b in cp:
+            p, q = max(cp[b] / tp, drift.EPS), max(cq[b] / tq, drift.EPS)
+            ref[b] = (p, q, (p - q) * math.log(p / q))
+        order = sorted(ref, key=lambda b: (-ref[b][2], b))
+        rows = sorted(explain[(part, key)], key=lambda r: r["rank"])
+        assert [r["rank"] for r in rows] == list(range(1, len(order) + 1))
+        assert [r["bin"] for r in rows] == order
+        for r in rows:
+            p, q, contrib = ref[r["bin"]]
+            assert (r["c_p"], r["c_q"]) == (cp[r["bin"]], cq[r["bin"]])
+            assert r["p"] == pytest.approx(p, abs=1e-6)
+            assert r["q"] == pytest.approx(q, abs=1e-6)
+            assert r["psi_contrib"] == pytest.approx(contrib, abs=1e-6)
+        assert sum(r["psi_contrib"] for r in rows) == pytest.approx(psi, abs=1e-5)
+
+        # W1 = bin_width x sum |cdf gap| over the numerically ordered grid
+        if kind == "bucket":
+            gap = f_p = f_q = 0.0
+            for b in sorted(cp, key=_bin_order):
+                f_p += cp[b] / tp
+                f_q += cq[b] / tq
+                gap += abs(f_p - f_q)
+            assert w1[(part, key)]["w1"] == pytest.approx(width * gap, abs=1e-6)
+
+        # pooled two-sample chi-square; dof = bins live on either side - 1
+        n_p, n_q = sum(cp.values()), sum(cq.values())
+        x2 = 0.0
+        for b in cp:
+            pool = (cp[b] + cq[b]) / max(n_p + n_q, 1)
+            for o, e in ((cp[b], n_p * pool), (cq[b], n_q * pool)):
+                x2 += (o - e) ** 2 / e if e > 0 else 0.0
+        c = chi2[(part, key)]
+        assert c["chi2"] == pytest.approx(x2, abs=1e-6)
+        assert c["dof"] == sum(1 for b in cp if cp[b] + cq[b] > 0) - 1
+        assert (c["n_p"], c["n_q"]) == (n_p, n_q)
+
+    # the planted cases really occur
+    ties = {r["bin"]: r for r in explain[("p0", "ties")]}
+    assert ties["x"]["psi_contrib"] == ties["y"]["psi_contrib"]
+    assert ties["x"]["rank"] + 1 == ties["y"]["rank"]
+    assert metrics[("p0", "zero_part")]["psi"] > 0
 
 
 def test_changepoint_scan_finds_planted_step(spark):

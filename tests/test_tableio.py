@@ -70,6 +70,23 @@ def test_read_missing_table_is_empty(spark, tmp_path):
     assert df.count() == 0 and df.columns == ["part", "v"]
 
 
+def test_missing_table_reads_back_in_the_jvm(spark, tmp_path):
+    """A missing table comes back with its declared (nested) schema and
+    no Python RDD scan in its plan, from both backends: collecting a
+    Scan ExistingRDD frame starts a Python worker on every fresh run."""
+    from pyspark.sql.types import StructType
+
+    from nadeefiler_spark.tableio import IcebergTableIO
+
+    schema = "part string, n bigint, tags array<string>, s struct<a: int, b: string>"
+    for io in (ParquetDirIO(spark, str(tmp_path)),
+               IcebergTableIO(spark, "spark_catalog.default")):
+        df = io.read("nope", schema)
+        assert df.schema == StructType.fromDDL(schema)
+        assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+        assert df.select("part").distinct().collect() == []
+
+
 def test_default_io_selects_iceberg_when_catalog_configured():
     """Catalog sniffing is pure conf inspection — exercised with a fake
     session (no Iceberg jar ships in the sandbox)."""
