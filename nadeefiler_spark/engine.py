@@ -29,7 +29,10 @@ dicts keyed by unit (a missing unit counts 0), commits one manifest row
 per pending unit under the engine's commit lock, and returns the
 verdicts of exactly the rows it committed, an in-memory relation that no
 later manifest rewrite can break (``run()`` returns the union of its
-stages'). :meth:`ValidationEngine.verdicts` is the manifest-backed
+stages'). ``run()`` runs the profile stage first, then its rule stages
+side by side in one thread pool, each committing under that lock; only
+a rule whose ``depends_on`` names another stage's rule makes them run
+one after another. :meth:`ValidationEngine.verdicts` is the manifest-backed
 history of every run. What n_rows and n_violations count is each
 stage's own definition, documented on its ``run_*`` method: clips
 scanned, clips sampled, violating history rows, regressed checks.
@@ -43,14 +46,14 @@ is O(#partitions), never O(rows).
 
 from __future__ import annotations
 
-import os
 import threading
 import time
 import uuid
-from concurrent.futures import ThreadPoolExecutor, as_completed
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,7 +130,7 @@ class ValidationEngine:
     def __post_init__(self) -> None:
         if self.io is None:
             self.io = default_io(self.spark, self.out_dir)
-        # concurrent stages (run() on a cluster master) commit one at a time
+        # run()'s rule stages overlap in a pool; they commit one at a time
         self._commit_lock = threading.Lock()
 
     # --- output tables -------------------------------------------------
@@ -321,52 +324,38 @@ class ValidationEngine:
             # from ONE manifest read
             return self._stage(stage, pending_of[stage], False, run_id, body)
 
-        # profile runs first: every later stage may read its outputs
-        try:
-            frames = self._run_stages(run_stage, rule_stages, fail_stage)
-        finally:
-            if decoded is not None:
-                decoded.unpersist()
-
-        return reduce(DataFrame.unionByName, frames)
-
-    def _run_stages(self, run_stage, rule_stages, fail_stage) -> list[DataFrame]:
-        frames = [run_stage("profile")]
-
-        # Later stages CAN run concurrently when their rules have no
-        # dependencies on rules in other pending stages. Default: ON for
-        # cluster masters, OFF for local[*] — measured both ways:
-        # at local[32] concurrent submission contends on the single
-        # local-mode driver (14-16s serial vs 23-46s concurrent), but on
-        # a real standalone cluster overlapping constraints/audio/drift
-        # hides stage latency (96k clips: 2,248-2,479 -> 2,630 clips/s
-        # at one 8-core executor, 3,837-4,063 -> 4,464 at four;
-        # BENCH/BASELINE.md run 5). NADEEFILER_CONCURRENT_STAGES=1/0
-        # overrides either way. Cascades (cross-stage depends_on,
-        # reference profilers/config.js:10-20) always run serially in
-        # topological order.
+        # Profile runs first: every rule stage may read its outputs. The
+        # rule stages then overlap, as the reference's independent
+        # profilers do: on 4 vCPUs, 16k clips took 9.5-10.3 s overlapped
+        # vs 11.6-12.9 s serial, warm 4k 8.1-9.7 vs 10.1-14.7 s. Only
+        # local[32] on a 32-vCPU host ran slower overlapped (one
+        # local-mode driver; BENCH/BASELINE.md run 5). A wrapper made per
+        # stage on this thread gives each stage its own copy of the
+        # caller's local properties (job group, description, scheduler
+        # pool); one shared wrapper would share one properties object,
+        # which every SQL execution writes its id into. Cascades
+        # (cross-stage depends_on, reference profilers/config.js:10-20)
+        # run serially in stage order.
         stage_of = {r.name: r.stage for r in self.rules}
         cross_dep = any(
             stage_of.get(dep) not in (None, r.stage, "profile")
             for r in self.rules
             for dep in r.depends_on
         )
-        env_val = os.environ.get("NADEEFILER_CONCURRENT_STAGES", "")
-        is_local = self.spark.sparkContext.master.startswith("local")
-        concurrent_env = env_val == "1" or (env_val == "" and not is_local)
-        if cross_dep or not concurrent_env or fail_stage is not None or len(rule_stages) <= 1:
-            frames += [run_stage(stage) for stage in rule_stages]
-        else:
-            with ThreadPoolExecutor(max_workers=len(rule_stages)) as pool:
-                futures = {pool.submit(run_stage, s): s for s in rule_stages}
-                errs = []
-                for fut in as_completed(futures):
-                    if fut.exception() is not None:
-                        errs.append((futures[fut], fut.exception()))
-                if errs:
-                    raise errs[0][1]
-            frames += [fut.result() for fut in futures]
-        return frames
+        try:
+            frames = [run_stage("profile")]
+            if cross_dep:
+                frames += [run_stage(s) for s in rule_stages]
+            elif rule_stages:
+                with ThreadPoolExecutor(max_workers=len(rule_stages)) as pool:
+                    futures = [pool.submit(inheritable_thread_target(self.spark)(run_stage), s)
+                               for s in rule_stages]
+                frames += [f.result() for f in futures]
+        finally:
+            if decoded is not None:
+                decoded.unpersist()
+
+        return reduce(DataFrame.unionByName, frames)
 
     # --- cascade stage: semantic typing ------------------------------------
     def run_semantic(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .tableio import empty_frame
+
 
 def candidate_lhs(
     df: DataFrame, cols: list[str], max_ndv_frac: float = 0.5,
@@ -105,9 +107,9 @@ def mine_fds(
         branches.append(branch)
     if not branches:
         part_schema = f"{part_col} string, " if part_col else ""
-        return df.sparkSession.createDataFrame(
-            [], part_schema + "lhs string, rhs string, n_groups bigint, "
-                "violating_groups bigint, holds boolean",
+        return empty_frame(
+            df.sparkSession, part_schema + "lhs string, rhs string, "
+            "n_groups bigint, violating_groups bigint, holds boolean",
         )
     out = branches[0]
     for b in branches[1:]:

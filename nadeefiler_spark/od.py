@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .tableio import empty_frame
+
 
 def candidate_on(
     df: DataFrame, cols: list[str], max_ndv: int = 1_000_000,
@@ -121,8 +123,8 @@ def check_order_dependencies(
         branches.append(b)
     if not branches:
         part_schema = f"{part_col} string, " if part_col else ""
-        return df.sparkSession.createDataFrame(
-            [],
+        return empty_frame(
+            df.sparkSession,
             part_schema + "on_col string, ordered_col string, "
             "n_groups bigint, violating_pairs bigint, holds boolean",
         )

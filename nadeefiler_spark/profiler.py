@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .tableio import empty_frame
+
 SUMMARY_SCHEMA = (
     "part string, key string, n_rows bigint, n_nulls bigint, ndv bigint, "
     "min string, max string, mean double, stddev double, avg_len double"
@@ -420,8 +422,8 @@ def mutual_info(
         )
         branches.append(b)
     if not branches:
-        return df.sparkSession.createDataFrame(
-            [],
+        return empty_frame(
+            df.sparkSession,
             "col_x string, col_y string, n_rows bigint, ndv_x bigint, "
             "ndv_y bigint, h_x double, h_y double, mi double, nmi double",
         )

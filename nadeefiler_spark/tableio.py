@@ -246,8 +246,8 @@ class IcebergTableIO:
     def _ensure(self, df: DataFrame, table: str, partition_cols: list[str]) -> bool:
         """Create the table if missing; True when it already existed.
 
-        Creation is IDEMPOTENT under concurrent stage threads (engine
-        stage concurrency is default-ON on cluster masters): two writers
+        Creation is IDEMPOTENT under concurrent stage threads (the
+        engine's rule stages always overlap): two writers
         can both observe tableExists()==False; the loser of the create
         race catches already-exists and falls through to append.
         """

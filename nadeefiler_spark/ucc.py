@@ -38,6 +38,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tableio import empty_frame
+
 
 @dataclass(frozen=True)
 class UccCandidate:
@@ -174,8 +176,8 @@ def mine_keys(
         }
         keys.extend(c.cols for c in level if c.label in found)
     if not results:
-        return df.sparkSession.createDataFrame(
-            [],
+        return empty_frame(
+            df.sparkSession,
             "tbl string, cols string, n_rows bigint, n_nulls bigint, "
             "n_groups bigint, dup_rows bigint, is_unique boolean, "
             "is_key boolean",

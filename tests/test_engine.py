@@ -97,12 +97,14 @@ def test_resume_after_midrun_failure(spark, tiny_cfg, clips_dir, tmp_path_factor
     refs = spark.read.parquet(f"{clips_dir}/transcript_refs")
     with pytest.raises(RuntimeError, match="injected failure"):
         eng.run(clips, refs, run_id="k1", fail_stage="audio")
+    # the rule stages overlap: constraints and drift commit although
+    # audio fails, and run() re-raises once every stage has finished
     m1 = eng.manifest().toPandas()
-    assert set(m1["stage"]) == {"profile", "constraints"}
+    assert set(m1["stage"]) == {"profile", "constraints", "drift"}
 
     eng.run(clips, refs, run_id="k2")  # resume completes only remaining stages
     m2 = eng.manifest().toPandas()
-    assert set(m2[m2["run_id"] == "k2"]["stage"]) == {"audio", "drift"}
+    assert set(m2[m2["run_id"] == "k2"]["stage"]) == {"audio"}
 
     # final state identical to the uninterrupted run in run_dir
     # (exact-duplicate source rows legitimately yield identical violation
@@ -208,13 +210,12 @@ def test_semantic_cascade_stage(spark, run_dir):
     assert (m[m["stage"] == "semantic"]["run_id"] == "sem1").all()
 
 
-def test_concurrent_stages_match_serial(spark, tiny_cfg, clips_dir, run_dir, monkeypatch):
-    """NADEEFILER_CONCURRENT_STAGES=1 (the cluster default) must produce
-    exactly the serial run's violations — stages share the decode cache
-    and commit under a lock."""
+def test_independent_default_runs_agree(spark, tiny_cfg, clips_dir, run_dir):
+    """Two independent default runs produce the same violations: the
+    overlapping rule stages share the decode cache and commit under a
+    lock, so neither the order they finish in nor the output dir shows."""
     import tempfile
 
-    monkeypatch.setenv("NADEEFILER_CONCURRENT_STAGES", "1")
     out = tempfile.mkdtemp(prefix="conc_out_")
     eng = ValidationEngine(
         spark, out, rules=default_clip_rules(), profile_cfg=default_clips_config()
@@ -229,6 +230,70 @@ def test_concurrent_stages_match_serial(spark, tiny_cfg, clips_dir, run_dir, mon
     a = sorted(map(tuple, eng.violations().select(*key).collect()))
     b = sorted(map(tuple, _engine(spark, run_dir).violations().select(*key).collect()))
     assert a == b
+
+
+def test_stage_jobs_stay_in_callers_job_group(spark, clips_dir, tmp_path):
+    """Every job of run(), the rule stages' pool threads included, runs
+    in the job group set on the calling thread, so the caller can
+    describe, schedule and cancel the run as one group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    eng = _engine(spark, str(tmp_path / "grp"))
+    clips = spark.read.parquet(f"{clips_dir}/clips")
+    refs = spark.read.parquet(f"{clips_dir}/transcript_refs")
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setLocalProperty("spark.jobGroup.id", "engine_run")
+    try:
+        eng.run(clips, refs, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("engine_run")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_cross_stage_dependency_sees_upstream_rows(spark, clips_dir, tmp_path):
+    """A rule whose depends_on names a rule of an earlier stage reads
+    that stage's committed violations: such a cascade runs the rule
+    stages one after another instead of overlapping them."""
+    from dataclasses import dataclass
+
+    from pyspark.sql import functions as F
+
+    from nadeefiler_spark.rules.base import Rule
+
+    @dataclass
+    class EchoUpstream(Rule):
+        engine: ValidationEngine | None = None
+
+        def violations(self, ctx):
+            up = self.engine.violations().where(
+                (F.col("stage") == "constraints") & (F.col("rule") == "sr_domain")
+            )
+            return up.select(
+                "part", F.lit(self.name).alias("rule"), "clip_id",
+                F.concat(F.lit("after "), "detail").alias("detail"),
+            )
+
+    rules = [r for r in default_clip_rules() if r.name == "sr_domain"]
+    echo = EchoUpstream(name="echo_sr", stage="audio", depends_on=("sr_domain",))
+    eng = ValidationEngine(spark, str(tmp_path / "cascade"), rules=[*rules, echo],
+                           profile_cfg=default_clips_config())
+    echo.engine = eng
+    # without the binary column the audio stage runs no decode
+    clips = spark.read.parquet(f"{clips_dir}/clips").drop("bytes")
+    eng.run(clips, resume=False)
+
+    viol = eng.violations()
+    upstream = viol.where(F.col("rule") == "sr_domain").select("part", "clip_id")
+    echoed = viol.where(
+        (F.col("rule") == "echo_sr") & (F.col("stage") == "audio")
+    ).select("part", "clip_id")
+    up_rows = sorted(map(tuple, upstream.collect()))
+    assert up_rows
+    assert sorted(map(tuple, echoed.collect())) == up_rows
 
 
 def test_violation_samples_triage_view(spark, run_dir):

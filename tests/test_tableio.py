@@ -5,8 +5,11 @@ the same contract; exercised only when an Iceberg catalog is configured
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from nadeefiler_spark import fd, od, profiler, ucc
 from nadeefiler_spark.tableio import ParquetDirIO, default_io, iceberg_catalogs
 
 
@@ -74,8 +77,6 @@ def test_missing_table_reads_back_in_the_jvm(spark, tmp_path):
     """A missing table comes back with its declared (nested) schema and
     no Python RDD scan in its plan, from both backends: collecting a
     Scan ExistingRDD frame starts a Python worker on every fresh run."""
-    from pyspark.sql.types import StructType
-
     from nadeefiler_spark.tableio import IcebergTableIO
 
     schema = "part string, n bigint, tags array<string>, s struct<a: int, b: string>"
@@ -85,6 +86,34 @@ def test_missing_table_reads_back_in_the_jvm(spark, tmp_path):
         assert df.schema == StructType.fromDDL(schema)
         assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
         assert df.select("part").distinct().collect() == []
+
+
+_FD = "lhs string, rhs string, n_groups bigint, violating_groups bigint, holds boolean"
+_OD = ("on_col string, ordered_col string, n_groups bigint, "
+       "violating_pairs bigint, holds boolean")
+
+
+@pytest.mark.parametrize("mine, schema", [
+    (lambda df: fd.mine_fds(df, ["part", "v"], lhs_cols=[]), _FD),
+    (lambda df: fd.mine_fds(df, ["v"], lhs_cols=[], part_col="part"),
+     "part string, " + _FD),
+    (lambda df: od.check_order_dependencies(df, []), _OD),
+    (lambda df: od.check_order_dependencies(df, [], part_col="part"),
+     "part string, " + _OD),
+    (lambda df: profiler.mutual_info(df, []),
+     "col_x string, col_y string, n_rows bigint, ndv_x bigint, ndv_y bigint, "
+     "h_x double, h_y double, mi double, nmi double"),
+    (lambda df: ucc.mine_keys(df, []),
+     "tbl string, cols string, n_rows bigint, n_nulls bigint, n_groups bigint, "
+     "dup_rows bigint, is_unique boolean, is_key boolean"),
+], ids=["fd", "fd_part", "od", "od_part", "mutual_info", "ucc"])
+def test_empty_miner_results_plan_in_the_jvm(spark, mine, schema):
+    """The miners' no-candidate branches return their declared schema as
+    an empty frame planned in the JVM, with no Python RDD scan."""
+    out = mine(_df(spark, [("a", 1), ("b", 2)]))
+    assert out.schema == StructType.fromDDL(schema)
+    assert "ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.collect() == []
 
 
 def test_default_io_selects_iceberg_when_catalog_configured():
