@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 
 from . import profiler as prof
 from .rules.base import Rule, RuleContext, topo_sort
-from .rules.audio_rules import decode_facts
+from .rules.audio_rules import DurationConsistencyRule, SampleRateConsistencyRule, decode_facts
 from .tableio import default_io, empty_frame
 
 STAGE_ORDER = ("profile", "constraints", "audio", "drift", "semantic")
@@ -696,11 +696,14 @@ class ValidationEngine:
             key = F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(2**31))
             sampled = scoped.where(sample_key(key, salt) < F.lit(threshold(fraction)))
             facts = decode_facts(sampled, with_snr=False)
-            tol = F.greatest(F.lit(float(abs_tol_ms)), F.lit(rel_tol) * F.col("dur_ms"))
+            # the audio rules' own predicates (column expressions over
+            # the facts; both read no context): each is guarded by
+            # decode_error IS NULL, so OR-ing in the failure is exact
+            dur = DurationConsistencyRule(abs_tol_ms=abs_tol_ms, rel_tol=rel_tol)
             viol = (
                 F.col("decode_error").isNotNull()
-                | (F.col("dec_sr") != F.col("sr_hz"))
-                | (F.abs(F.col("dec_ms") - F.col("dur_ms")) > tol)
+                | SampleRateConsistencyRule().predicate(None)[0]
+                | dur.predicate(None)[0]
             )
             agg = facts.groupBy("part").agg(
                 F.count(F.lit(1)).alias("n_sampled"),
@@ -1448,68 +1451,68 @@ class ValidationEngine:
             "min", "max", "mean", "stddev", "avg_len",
         )
 
-    def _run_rule_stage(self, stage, rules, ctx, pending):
-        # Fold all predicate-style rules (pure row filters) into ONE
-        # shared scan: array<struct(rule, bad, detail)> -> filter -> explode.
-        # Join/agg rules keep their own branch; everything unions into a
-        # single write job.
-        folded: list[F.Column] = []
+    @staticmethod
+    def _fold_violations(stage, rules, ctx) -> DataFrame:
+        """The stage's violations as one frame. The predicate rules (pure
+        row filters) fold into ONE scan per row source — the frame
+        Rule.rows returns, matched by identity: ctx.clips for the
+        constraint rules, the persisted ctx.decoded for the audio rules —
+        as array<struct(rule, bad, detail)> -> filter -> explode.
+        Join/agg rules keep their own branch; everything unions into a
+        single write job."""
+        from collections import Counter
+
+        sources: dict[int, list] = {}  # id(rows) -> [rows, staged scan, structs]
         branches: list[DataFrame] = []
-        # rules with staged helper columns (Rule.prepare) chain their
-        # staging over the shared scan; the predicates then reference
-        # MATERIALIZED columns, keeping each projection's generated code
-        # small (the flat header-probe tree busts Janino's 64 KB limit)
-        scan = ctx.clips
         for rule in rules:
             pd_ = rule.predicate(ctx)
-            if pd_ is not None:
-                scan = rule.prepare(scan, ctx)
-                # prepare() chains over the SHARED scan — a helper
-                # column colliding with an input column or another
-                # rule's staging makes every downstream reference
-                # ambiguous; fail loudly with attribution instead of
-                # letting the whole stage die on AMBIGUOUS_REFERENCE
-                from collections import Counter
-
-                dups = [c for c, n in Counter(scan.columns).items() if n > 1]
-                if dups:
-                    raise ValueError(
-                        f"rule {rule.name!r}: prepare() staged duplicate "
-                        f"column(s) {dups} onto the shared {stage} scan; "
-                        "namespace helper columns per rule instance "
-                        "(__<rule.name>_ prefix convention, rules/base.py)"
-                    )
-                pred, detail = pd_
-                folded.append(F.struct(
-                    F.lit(rule.name).alias("rule"),
-                    pred.alias("bad"),
-                    detail.cast("string").alias("detail"),
-                ))
-            else:
+            if pd_ is None:
                 branches.append(rule.violations(ctx))
-        if folded:
+                continue
+            rows = rule.rows(ctx)
+            src = sources.setdefault(id(rows), [rows, rows, []])
+            # rules with staged helper columns (Rule.prepare) chain their
+            # staging over the shared scan; the predicates then reference
+            # MATERIALIZED columns, keeping each projection's generated
+            # code small (the flat header-probe tree busts Janino's 64 KB
+            # limit). A helper column colliding with an input column or
+            # another rule's staging makes every downstream reference
+            # ambiguous; fail loudly with attribution instead of letting
+            # the whole stage die on AMBIGUOUS_REFERENCE
+            src[1] = rule.prepare(src[1], ctx)
+            dups = [c for c, n in Counter(src[1].columns).items() if n > 1]
+            if dups:
+                raise ValueError(
+                    f"rule {rule.name!r}: prepare() staged duplicate "
+                    f"column(s) {dups} onto the shared {stage} scan; "
+                    "namespace helper columns per rule instance "
+                    "(__<rule.name>_ prefix convention, rules/base.py)"
+                )
+            pred, detail = pd_
+            src[2].append(F.struct(
+                F.lit(rule.name).alias("rule"),
+                pred.alias("bad"),
+                detail.cast("string").alias("detail"),
+            ))
+        for _, scan, folded in sources.values():
             hits = scan.select(
                 F.col(ctx.part_col).cast("string").alias("part"),
                 F.col(ctx.key_col).cast("string").alias("clip_id"),
                 F.filter(F.array(*folded), lambda s: s["bad"]).alias("vs"),
             ).where(F.size("vs") > 0)
             branches.append(
-                hits.select(
-                    "part",
-                    F.explode("vs").alias("v"),
-                    "clip_id",
-                ).select("part", F.col("v.rule").alias("rule"), "clip_id",
-                         F.col("v.detail").alias("detail"))
+                hits.select("part", F.explode("vs").alias("v"), "clip_id")
+                .select("part", "v.rule", "clip_id", "v.detail")
             )
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
+        out = reduce(DataFrame.unionByName, branches)
+        return out.select("part", "rule", "clip_id", "detail")
 
+    def _run_rule_stage(self, stage, rules, ctx, pending):
         # Per-part violation counts ride along on the write job via the
         # Observation API (conditional sums) — no second job. Falls back
         # to a read-back aggregation when the pending set is large (the
         # observe expression list is O(#parts)).
-        to_write = out.select("part", "rule", "clip_id", "detail")
+        to_write = self._fold_violations(stage, rules, ctx)
         obs = None
         if len(pending) <= 64:
             from pyspark.sql import Observation

@@ -263,10 +263,14 @@ def loudness_stats(clips: DataFrame, target_dbfs: float = -20.0) -> DataFrame:
 
 @dataclass
 class _AudioRule(Rule):
+    """A predicate over the shared decode facts (``ctx.decoded``): the
+    engine folds every audio rule into one scan of the persisted
+    decode."""
+
     def __post_init__(self) -> None:
         self.stage = "audio"
 
-    def _facts(self, ctx: RuleContext) -> DataFrame:
+    def rows(self, ctx: RuleContext) -> DataFrame:
         assert ctx.decoded is not None, "engine must supply ctx.decoded for audio rules"
         return ctx.decoded
 
@@ -277,16 +281,13 @@ class CodecConsistencyRule(_AudioRule):
 
     name: str = "audio_codec"
 
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        d = self._facts(ctx)
-        bad = d.where(
-            F.col("decode_error").isNotNull() | (F.col("dec_codec") != F.col("codec"))
-        )
+    def predicate(self, ctx: RuleContext):
+        pred = F.col("decode_error").isNotNull() | (F.col("dec_codec") != F.col("codec"))
         detail = F.coalesce(
             F.concat(F.lit("decode_error:"), F.col("decode_error")),
             F.concat(F.lit("container="), F.col("dec_codec"), F.lit(" column="), F.col("codec")),
         )
-        return self.shape(bad, ctx, self.name, detail)
+        return pred, detail
 
 
 @dataclass
@@ -295,13 +296,10 @@ class SampleRateConsistencyRule(_AudioRule):
 
     name: str = "audio_sample_rate"
 
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        d = self._facts(ctx)
-        bad = d.where(F.col("decode_error").isNull() & (F.col("dec_sr") != F.col("sr_hz")))
-        return self.shape(
-            bad, ctx, self.name,
-            F.concat(F.lit("decoded="), F.col("dec_sr"), F.lit(" column="), F.col("sr_hz")),
-        )
+    def predicate(self, ctx: RuleContext):
+        pred = F.col("decode_error").isNull() & (F.col("dec_sr") != F.col("sr_hz"))
+        detail = F.concat(F.lit("decoded="), F.col("dec_sr"), F.lit(" column="), F.col("sr_hz"))
+        return pred, detail
 
 
 @dataclass
@@ -313,17 +311,16 @@ class DurationConsistencyRule(_AudioRule):
     abs_tol_ms: int = 20
     rel_tol: float = 0.02
 
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        d = self._facts(ctx)
+    def predicate(self, ctx: RuleContext):
         tol = F.greatest(F.lit(float(self.abs_tol_ms)), F.lit(self.rel_tol) * F.col("dur_ms"))
-        bad = d.where(
+        pred = (
             F.col("decode_error").isNull()
             & (F.abs(F.col("dec_ms") - F.col("dur_ms")) > tol)
         )
-        return self.shape(
-            bad, ctx, self.name,
-            F.concat(F.lit("decoded_ms="), F.col("dec_ms"), F.lit(" dur_ms="), F.col("dur_ms")),
+        detail = F.concat(
+            F.lit("decoded_ms="), F.col("dec_ms"), F.lit(" dur_ms="), F.col("dur_ms")
         )
+        return pred, detail
 
 
 @dataclass
@@ -333,13 +330,9 @@ class SnrRule(_AudioRule):
     name: str = "audio_snr"
     min_snr_db: float = SNR_PASS_DB
 
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        d = self._facts(ctx)
-        bad = d.where(F.col("decode_error").isNull() & (F.col("snr_db") < self.min_snr_db))
-        return self.shape(
-            bad, ctx, self.name,
-            F.concat(F.lit("snr_db="), F.round(F.col("snr_db"), 2)),
-        )
+    def predicate(self, ctx: RuleContext):
+        pred = F.col("decode_error").isNull() & (F.col("snr_db") < self.min_snr_db)
+        return pred, F.concat(F.lit("snr_db="), F.round(F.col("snr_db"), 2))
 
 
 @dataclass
@@ -364,23 +357,24 @@ class AudioQcRule(_AudioRule):
     max_silence_ratio: float = 0.9
     max_abs_dc: float = 0.05
 
-    def violations(self, ctx: RuleContext) -> DataFrame:
+    def rows(self, ctx: RuleContext) -> DataFrame:
         d = ctx.decoded
-        if d is None or "clip_ratio" not in d.columns:
-            d = decode_facts(ctx.clips, with_snr=False, with_qc=True)
+        if d is not None and "clip_ratio" in d.columns:
+            return d
+        return decode_facts(ctx.clips, with_snr=False, with_qc=True)
+
+    def predicate(self, ctx: RuleContext):
         clipped = F.col("clip_ratio") > self.max_clip_ratio
         silent = F.col("silence_ratio") > self.max_silence_ratio
         dc = F.abs(F.col("dc_offset")) > self.max_abs_dc
-        bad = d.where(
-            F.col("decode_error").isNull() & (clipped | silent | dc)
-        )
+        pred = F.col("decode_error").isNull() & (clipped | silent | dc)
         detail = F.concat_ws(
             ",",
             F.when(clipped, F.concat(F.lit("clip_ratio="), F.round("clip_ratio", 4))),
             F.when(silent, F.concat(F.lit("silence_ratio="), F.round("silence_ratio", 4))),
             F.when(dc, F.concat(F.lit("dc_offset="), F.round("dc_offset", 4))),
         )
-        return self.shape(bad, ctx, self.name, detail)
+        return pred, detail
 
 
 @dataclass
@@ -442,11 +436,6 @@ class HeaderTriageRule(Rule):
         if not self.flag_real_codecs:
             pred = pred & (finding != F.lit("needs_decode"))
         return pred, finding
-
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        pred, detail = self.predicate(ctx)
-        staged = self.prepare(ctx.clips, ctx)
-        return self.shape(staged.where(pred), ctx, self.name, detail)
 
 
 def default_audio_rules() -> list[Rule]:

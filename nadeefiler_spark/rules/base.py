@@ -3,10 +3,16 @@
 The reference validates a plug-in contract at load time
 (``/root/reference/profilers/worker.js:197-222``): a module exports
 ``onFinish`` plus one of ``onFile | onTuple | onValue``, optionally a
-custom input ``selector`` and a ``resultsCatcher`` sink. Here a rule is an
-object that, given a :class:`RuleContext` (its "selector"), returns a
-violations DataFrame (its "resultsCatcher" writes); expression-only rules
-compile to Catalyst columns and never touch Python rows.
+custom input ``selector`` and a ``resultsCatcher`` sink. The harness owns
+the pass over the data; the plug-in states only per-tuple logic. Here a
+row rule is likewise its :meth:`Rule.predicate` (the ``onTuple`` analog:
+Catalyst columns, never Python rows) plus, when it reads a frame other
+than ``ctx.clips``, :meth:`Rule.rows` (its "selector"). The engine folds
+every predicate rule over the row source it names into one pass, and the
+default :meth:`Rule.violations` applies the same predicate standalone.
+Only rules that need joins or aggregation write ``violations()``
+themselves; either way the result is a violations DataFrame (what the
+"resultsCatcher" writes).
 
 Cascade semantics (``/root/reference/profilers/config.js:10-20``,
 ``api/hooks/amqp.js:40-42``: profilers form a tree, children read their
@@ -42,36 +48,57 @@ class RuleContext:
 
 @dataclass
 class Rule:
-    """Base rule. Subclasses override :meth:`violations`."""
+    """Base rule.
+
+    A row rule implements :meth:`predicate` (plus :meth:`rows` when it
+    reads a frame other than ``ctx.clips``, and :meth:`prepare` when its
+    predicate needs staged helper columns) and inherits
+    :meth:`violations`. A rule that needs joins or aggregation overrides
+    :meth:`violations` instead."""
 
     name: str = ""
     stage: str = "constraints"  # profile | constraints | audio | drift | semantic
     depends_on: tuple[str, ...] = field(default_factory=tuple)
 
     def violations(self, ctx: RuleContext) -> DataFrame:
-        raise NotImplementedError
+        """The rows of :meth:`rows` that :meth:`predicate` flags, staged
+        by :meth:`prepare` — the standalone form of the engine's fold."""
+        pd_ = self.predicate(ctx)
+        if pd_ is None:
+            raise NotImplementedError
+        pred, detail = pd_
+        rows = self.prepare(self.rows(ctx), ctx)
+        return self.shape(rows.where(pred), ctx, self.name, detail)
 
     def predicate(self, ctx: RuleContext):
-        """Optional fast path: return ``(violation_pred, detail)`` Columns
-        evaluated per clips row. Rules that implement this are folded by
-        the engine into ONE shared scan per stage (the row-rule analog of
-        the profiler's single-pass agg; reference runs each profiler as a
+        """Return ``(violation_pred, detail)`` Columns evaluated per row of
+        :meth:`rows`. The engine folds every rule that implements this
+        into ONE shared scan per row source (the row-rule analog of the
+        profiler's single-pass agg; reference runs each profiler as a
         separate pass over the dataset, profilers/worker.js:121-144).
         Return None (default) for rules needing joins/aggregation.
         """
         return None
 
+    def rows(self, ctx: RuleContext) -> DataFrame:
+        """The frame :meth:`predicate` is evaluated over (default
+        ``ctx.clips``). The engine folds rules whose ``rows`` return the
+        same frame object into one scan, so return a context frame, not
+        a fresh derivation, unless the rule must scan alone."""
+        return ctx.clips
+
     def prepare(self, df: DataFrame, ctx: RuleContext) -> DataFrame:
-        """Optional staging step for the predicate fast path: append
-        helper columns the :meth:`predicate` Columns reference (e.g. a
+        """Optional staging step for :meth:`predicate`: append helper
+        columns the :meth:`predicate` Columns reference (e.g. a
         materialized header slice), keeping each projection small enough
         for whole-stage codegen — a flat expression tree re-derived per
         reference can exceed Janino's 64 KB method limit and silently
         drop the whole shared scan to interpreted eval. The engine
-        chains every folded rule's ``prepare`` over the shared scan, so
-        helper columns must be uniquely named (``__<rule>``-prefixed by
-        convention); they never reach the violations output (the fold
-        projects only part/rule/clip_id/detail). Default: no staging."""
+        chains every folded rule's ``prepare`` over the shared scan of
+        its row source (:meth:`rows`), so helper columns must be
+        uniquely named (``__<rule>``-prefixed by convention); they never
+        reach the violations output (the fold projects only
+        part/rule/clip_id/detail). Default: no staging."""
         return df
 
     @staticmethod
@@ -83,6 +110,25 @@ class Rule:
             F.col(ctx.key_col).cast("string").alias("clip_id"),
             detail.cast("string").alias("detail"),
         )
+
+    def implicate(self, pairs: DataFrame, ctx: RuleContext, detail, extra=()) -> DataFrame:
+        """Violation rows for a pair rule: both members of each
+        ``(id_a, id_b)`` pair are implicated, one row per clip with its
+        smallest partner as ``__other`` (deterministic), and each
+        ``extra`` per-pair column as ``__<col>`` (its min per clip).
+        Partition lineage comes from a broadcast join of the implicated
+        ids (tiny — violations, not corpus) back to ``ctx.clips``."""
+        k = ctx.key_col
+        sides = [
+            pairs.select(F.col(a).alias(k), F.col(b).alias("__other"), *extra)
+            for a, b in (("id_a", "id_b"), ("id_b", "id_a"))
+        ]
+        implicated = sides[0].unionByName(sides[1]).groupBy(k).agg(
+            F.min("__other").alias("__other"),
+            *[F.min(c).alias(f"__{c}") for c in extra],
+        )
+        rows = ctx.clips.select(k, ctx.part_col).join(F.broadcast(implicated), k)
+        return self.shape(rows, ctx, self.name, detail)
 
 
 def topo_sort(rules: list[Rule]) -> list[Rule]:

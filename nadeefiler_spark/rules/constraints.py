@@ -62,10 +62,6 @@ class DomainRule(Rule):
         self.name = self.name or f"{self.column}_domain"
         self.stage = "constraints"
 
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        pred, detail = self.predicate(ctx)
-        return self.shape(ctx.clips.where(pred), ctx, self.name, detail)
-
     def predicate(self, ctx: RuleContext):
         c = F.col(self.column)
         pred = ~c.isin(list(self.allowed)) | c.isNull()
@@ -83,10 +79,6 @@ class RequiredRule(Rule):
     def __post_init__(self) -> None:
         self.name = self.name or f"{self.column}_required"
         self.stage = "constraints"
-
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        pred, detail = self.predicate(ctx)
-        return self.shape(ctx.clips.where(pred), ctx, self.name, detail)
 
     def predicate(self, ctx: RuleContext):
         c = F.col(self.column)
@@ -113,10 +105,6 @@ class PiiRule(Rule):
         from ..functions import pii
 
         return list(self.kinds) or list(pii.PII_PATTERNS)
-
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        pred, detail = self.predicate(ctx)
-        return self.shape(ctx.clips.where(pred), ctx, self.name, detail)
 
     def predicate(self, ctx: RuleContext):
         from ..functions import pii
@@ -145,10 +133,6 @@ class RangeRule(Rule):
         self.name = self.name or f"{self.column}_range"
         self.stage = "constraints"
 
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        pred, detail = self.predicate(ctx)
-        return self.shape(ctx.clips.where(pred), ctx, self.name, detail)
-
     def predicate(self, ctx: RuleContext):
         c = F.col(self.column).cast("double")
         pred = F.lit(False)
@@ -176,6 +160,20 @@ class ReferentialRule(Rule):
         return self.shape(orphans, ctx, self.name, F.lit("orphan_ref"))
 
 
+def _join_parent(rule, ctx: RuleContext) -> DataFrame:
+    """refs rows inner-joined to their parent clip on ``rule.key``:
+    (key, _ref_val, part, _parent_val) for ``rule.column``. The parent
+    side is de-duplicated per key (duplicate parent rows are exact
+    copies, so one stands for all)."""
+    assert ctx.refs is not None, f"{type(rule).__name__} needs ctx.refs"
+    parent = ctx.clips.select(
+        rule.key, ctx.part_col, F.col(rule.column).alias("_parent_val")
+    ).dropDuplicates([rule.key])
+    return ctx.refs.select(
+        rule.key, F.col(rule.column).alias("_ref_val")
+    ).join(parent, rule.key, "inner")
+
+
 @dataclass
 class MatchRule(Rule):
     """A refs column must equal the parent clips column (null-safe).
@@ -193,16 +191,9 @@ class MatchRule(Rule):
         self.stage = "constraints"
 
     def violations(self, ctx: RuleContext) -> DataFrame:
-        assert ctx.refs is not None, "MatchRule needs ctx.refs"
-        c = ctx.clips.select(
-            self.key, ctx.part_col, F.col(self.column).alias("_parent_val")
-        ).dropDuplicates([self.key])
-        joined = ctx.refs.select(self.key, F.col(self.column).alias("_ref_val")).join(
-            c, self.key, "inner"
-        )
-        bad = joined.where(~F.col("_ref_val").eqNullSafe(F.col("_parent_val"))).dropDuplicates(
-            [self.key, "_ref_val"]
-        )
+        bad = _join_parent(self, ctx).where(
+            ~F.col("_ref_val").eqNullSafe(F.col("_parent_val"))
+        ).dropDuplicates([self.key, "_ref_val"])
         return self.shape(bad, ctx, self.name, F.lit(f"{self.column}_mismatch"))
 
 
@@ -241,13 +232,7 @@ class CerRule(Rule):
         return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
     def violations(self, ctx: RuleContext) -> DataFrame:
-        assert ctx.refs is not None, "CerRule needs ctx.refs"
-        c = ctx.clips.select(
-            self.key, ctx.part_col, F.col(self.column).alias("_parent_val")
-        ).dropDuplicates([self.key])
-        joined = ctx.refs.select(
-            self.key, F.col(self.column).alias("_ref_val")
-        ).join(c, self.key, "inner")
+        joined = _join_parent(self, ctx)
         if self.spread:
             joined = joined.repartition(self.spread, self.key)
         a, b = self._norm(F.col("_ref_val")), self._norm(F.col("_parent_val"))
@@ -290,10 +275,6 @@ class SpeakingRateRule(Rule):
     def __post_init__(self) -> None:
         self.name = self.name or "speaking_rate"
         self.stage = "constraints"
-
-    def violations(self, ctx: RuleContext) -> DataFrame:
-        pred, detail = self.predicate(ctx)
-        return self.shape(ctx.clips.where(pred), ctx, self.name, detail)
 
     def predicate(self, ctx: RuleContext):
         t = F.col(self.transcript_col)

@@ -136,23 +136,6 @@ class DenialRule(Rule):
         pairs = violation_pairs(
             ctx.clips, self.preds, ctx.key_col, self.max_block
         )
-        implicated = (
-            pairs.select(
-                F.col("id_a").alias(ctx.key_col), F.col("id_b").alias("__other")
-            )
-            .unionByName(
-                pairs.select(
-                    F.col("id_b").alias(ctx.key_col),
-                    F.col("id_a").alias("__other"),
-                )
-            )
-            .groupBy(ctx.key_col)
-            .agg(F.min("__other").alias("__other"))
-        )
-        rows = ctx.clips.select(ctx.key_col, ctx.part_col).join(
-            F.broadcast(implicated), ctx.key_col
-        )
-        return self.shape(
-            rows, ctx, self.name,
-            F.concat(F.lit("pair with "), F.col("__other")),
+        return self.implicate(
+            pairs, ctx, F.concat(F.lit("pair with "), F.col("__other"))
         )

@@ -97,36 +97,14 @@ class MatchingDependencyRule(Rule):
             self.gram_n,
             self.max_df,
         )
-        implicated = (
-            pairs.select(
-                F.col("id_a").alias(ctx.key_col),
-                F.col("id_b").alias("__other"),
-                "mismatched",
-            )
-            .unionByName(
-                pairs.select(
-                    F.col("id_b").alias(ctx.key_col),
-                    F.col("id_a").alias("__other"),
-                    "mismatched",
-                )
-            )
-            .groupBy(ctx.key_col)
-            .agg(
-                F.min("__other").alias("__other"),
-                F.min("mismatched").alias("__mismatched"),
-            )
-        )
-        rows = ctx.clips.select(ctx.key_col, ctx.part_col).join(
-            F.broadcast(implicated), ctx.key_col
-        )
-        return self.shape(
-            rows,
+        return self.implicate(
+            pairs,
             ctx,
-            self.name,
             F.concat(
                 F.lit("near "),
                 F.col("__other"),
                 F.lit(" differs on "),
                 F.col("__mismatched"),
             ),
+            extra=("mismatched",),
         )

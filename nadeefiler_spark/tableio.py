@@ -40,20 +40,6 @@ def _hadoop_path(spark: SparkSession, path: str):
     return hpath, hpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
-def _is_missing_path(e: Exception) -> bool:
-    """True when the read failed because the table path doesn't exist yet
-    (the normal first-run case), as opposed to corruption."""
-    try:
-        from pyspark.errors import AnalysisException
-    except ImportError:  # pragma: no cover - very old pyspark
-        AnalysisException = ()
-    if isinstance(e, AnalysisException):
-        cond = getattr(e, "getCondition", getattr(e, "getErrorClass", lambda: None))()
-        if "PATH_NOT_FOUND" in (cond or ""):
-            return True
-    return "Path does not exist" in str(e)
-
-
 def _escape_part(spark: SparkSession, value) -> str:
     """Partition value -> directory-name form, using Spark's OWN escaping
     (ExternalCatalogUtils.escapePathName): a value like "it's" is written
@@ -99,15 +85,13 @@ class ParquetDirIO:
         PROPAGATE: an empty manifest silently re-runs everything and a
         verdicts query lies about history.
         """
-        try:
-            r = self.spark.read
-            if schema:
-                r = r.schema(schema)
-            return r.parquet(self._path(table))
-        except Exception as e:  # pragma: no branch
-            if _is_missing_path(e):
-                return empty_frame(self.spark, schema)
-            raise
+        hpath, fs = _hadoop_path(self.spark, self._path(table))
+        if not fs.exists(hpath):
+            return empty_frame(self.spark, schema)
+        r = self.spark.read
+        if schema:
+            r = r.schema(schema)
+        return r.parquet(self._path(table))
 
     def replace_partitions(
         self,
