@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import profiler as prof
-from .rules.base import Rule, RuleContext, topo_sort
+from .rules.base import Rule, RuleContext, fold, topo_sort
 from .rules.audio_rules import DurationConsistencyRule, SampleRateConsistencyRule, decode_facts
 from .tableio import default_io, empty_frame
 
@@ -135,12 +135,20 @@ class ValidationEngine:
 
     # --- output tables -------------------------------------------------
     def manifest(self) -> DataFrame:
+        """One row per committed (run, partition, stage). ``wall_ms`` is
+        the stage's wall clock from start to commit: run() overlaps the
+        rule stages (constraints, audio, drift) on shared cores, so it
+        includes each stage's wait for cores the others hold. The walls
+        of one run do not sum to the run, and a stage's wall is not its
+        own cost."""
         return self.io.read("manifest", MANIFEST_SCHEMA)
 
     def verdicts(self) -> DataFrame:
         """Per-(partition, stage) pass/fail history of every run — a
         projection of the manifest (single source of truth; avoids a
-        second commit write per stage)."""
+        second commit write per stage). ``wall_ms`` is the manifest's:
+        it includes waiting for shared cores while stages overlap
+        (:meth:`manifest`)."""
         return _as_verdicts(self.manifest())
 
     def violations(self) -> DataFrame:
@@ -1451,68 +1459,12 @@ class ValidationEngine:
             "min", "max", "mean", "stddev", "avg_len",
         )
 
-    @staticmethod
-    def _fold_violations(stage, rules, ctx) -> DataFrame:
-        """The stage's violations as one frame. The predicate rules (pure
-        row filters) fold into ONE scan per row source — the frame
-        Rule.rows returns, matched by identity: ctx.clips for the
-        constraint rules, the persisted ctx.decoded for the audio rules —
-        as array<struct(rule, bad, detail)> -> filter -> explode.
-        Join/agg rules keep their own branch; everything unions into a
-        single write job."""
-        from collections import Counter
-
-        sources: dict[int, list] = {}  # id(rows) -> [rows, staged scan, structs]
-        branches: list[DataFrame] = []
-        for rule in rules:
-            pd_ = rule.predicate(ctx)
-            if pd_ is None:
-                branches.append(rule.violations(ctx))
-                continue
-            rows = rule.rows(ctx)
-            src = sources.setdefault(id(rows), [rows, rows, []])
-            # rules with staged helper columns (Rule.prepare) chain their
-            # staging over the shared scan; the predicates then reference
-            # MATERIALIZED columns, keeping each projection's generated
-            # code small (the flat header-probe tree busts Janino's 64 KB
-            # limit). A helper column colliding with an input column or
-            # another rule's staging makes every downstream reference
-            # ambiguous; fail loudly with attribution instead of letting
-            # the whole stage die on AMBIGUOUS_REFERENCE
-            src[1] = rule.prepare(src[1], ctx)
-            dups = [c for c, n in Counter(src[1].columns).items() if n > 1]
-            if dups:
-                raise ValueError(
-                    f"rule {rule.name!r}: prepare() staged duplicate "
-                    f"column(s) {dups} onto the shared {stage} scan; "
-                    "namespace helper columns per rule instance "
-                    "(__<rule.name>_ prefix convention, rules/base.py)"
-                )
-            pred, detail = pd_
-            src[2].append(F.struct(
-                F.lit(rule.name).alias("rule"),
-                pred.alias("bad"),
-                detail.cast("string").alias("detail"),
-            ))
-        for _, scan, folded in sources.values():
-            hits = scan.select(
-                F.col(ctx.part_col).cast("string").alias("part"),
-                F.col(ctx.key_col).cast("string").alias("clip_id"),
-                F.filter(F.array(*folded), lambda s: s["bad"]).alias("vs"),
-            ).where(F.size("vs") > 0)
-            branches.append(
-                hits.select("part", F.explode("vs").alias("v"), "clip_id")
-                .select("part", "v.rule", "clip_id", "v.detail")
-            )
-        out = reduce(DataFrame.unionByName, branches)
-        return out.select("part", "rule", "clip_id", "detail")
-
     def _run_rule_stage(self, stage, rules, ctx, pending):
         # Per-part violation counts ride along on the write job via the
         # Observation API (conditional sums) — no second job. Falls back
         # to a read-back aggregation when the pending set is large (the
         # observe expression list is O(#parts)).
-        to_write = self._fold_violations(stage, rules, ctx)
+        to_write = fold(rules, ctx)
         obs = None
         if len(pending) <= 64:
             from pyspark.sql import Observation

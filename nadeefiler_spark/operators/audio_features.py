@@ -1,7 +1,7 @@
 """Audio transforms for training-data prep: feature extraction and
 resampling — the audio analogs of the mandate's decode / feature-extract
-/ resize image ops, as Arrow-batched ``mapInPandas`` passes (no per-row
-Python, bytes never shuffle).
+/ resize image ops, each a pass of the shared per-clip decode loop
+(``rules.audio_rules.map_decoded``: Arrow batches, bytes never shuffle).
 
 - :func:`audio_features` emits a fixed-size embedding per clip
   (L2-normalized log band energies). The output is an ordinary
@@ -22,13 +22,13 @@ executor-local Arrow batches.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import audio
+from ..rules.audio_rules import map_decoded
 
 FEATURES_SCHEMA = "id string, features array<float>, feat_error string"
 RESAMPLE_SCHEMA = (
@@ -88,32 +88,16 @@ def audio_features(
     them avoid a corpus-sized join back on id.
     """
     carry = [c for c in carry_cols if c not in (id_col, bytes_col)]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from nadeefiler_spark import audio  # import on executor
-
-        for pdf in batches:
-            ids, feats, errs = [], [], []
-            for cid, blob in zip(pdf[id_col], pdf[bytes_col]):
-                ids.append(cid)
-                try:
-                    _c, sr, pcm = audio.decode(bytes(blob))
-                    feats.append(band_energy_features(pcm, int(sr), n_bands).tolist())
-                    errs.append(None)
-                except Exception as exc:
-                    feats.append(None)
-                    errs.append(str(exc)[:200])
-            out = {"id": ids, "features": feats, "feat_error": errs}
-            for c in carry:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType.fromDDL(FEATURES_SCHEMA)
-    for c in carry:
-        schema = schema.add(clips.schema[c])
-    return clips.select(id_col, bytes_col, *carry).mapInPandas(run, schema)
+    return map_decoded(
+        clips.select(
+            F.col(id_col).cast("string").alias("id"), *carry,
+            F.col(bytes_col).alias("bytes"),
+        ),
+        ["id", *carry],
+        "features array<float>",
+        lambda row, codec, sr, pcm: (band_energy_features(pcm, int(sr), n_bands).tolist(),),
+        "feat_error",
+    ).select("id", "features", "feat_error", *carry)
 
 
 def audio_embedding_dup_pairs(
@@ -185,29 +169,20 @@ def resample_clips(
     clip schema shape; undecodable rows carry ``resample_error`` with
     NULL bytes instead of failing the job."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from nadeefiler_spark import audio  # import on executor
+    def per_clip(row, src_codec, sr, pcm):
+        res = resample_pcm(pcm, int(sr), target_sr)
+        return audio.encode(res, target_sr, codec), int(round(1000.0 * len(res) / target_sr))
 
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "resample_error")}
-            for cid, blob in zip(pdf["clip_id"], pdf["bytes"]):
-                out["clip_id"].append(cid)
-                out["codec"].append(codec)
-                out["sr_hz"].append(target_sr)
-                try:
-                    _c, sr, pcm = audio.decode(bytes(blob))
-                    res = resample_pcm(pcm, int(sr), target_sr)
-                    out["bytes"].append(audio.encode(res, target_sr, codec))
-                    out["dur_ms"].append(int(round(1000.0 * len(res) / target_sr)))
-                    out["resample_error"].append(None)
-                except Exception as exc:
-                    out["bytes"].append(None)
-                    out["dur_ms"].append(None)
-                    out["resample_error"].append(str(exc)[:200])
-            yield pd.DataFrame(out)
-
-    return clips.select("clip_id", "bytes").mapInPandas(run, RESAMPLE_SCHEMA)
+    return map_decoded(
+        clips.select(F.col("clip_id").cast("string"), "bytes"),
+        ["clip_id"],
+        "bytes binary, dur_ms int",
+        per_clip,
+        "resample_error",
+    ).select(
+        "clip_id", "bytes", F.lit(target_sr).cast("int").alias("sr_hz"), "dur_ms",
+        F.lit(codec).alias("codec"), "resample_error",
+    )
 
 
 def spectral_rolloff(pcm: np.ndarray, sr_hz: int, q: float = 0.95) -> float:
@@ -283,37 +258,19 @@ def bandwidth_stats(
     the error instead of failing. Rounded to 6 dp.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from nadeefiler_spark import audio  # import on executor
+    def per_clip(row, codec, sr, pcm):
+        x = np.asarray(pcm, dtype=np.float32)
+        mag2 = np.abs(np.fft.rfft(x)) ** 2 if len(x) else np.zeros(0)
+        r = _rolloff_from_power(mag2, int(sr), len(x), q)
+        return (
+            int(sr), round(r, 6), round(r / (sr / 2.0), 6) if sr else 0.0,
+            round(_flatness_from_power(mag2), 6),
+        )
 
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("__id", "dec_sr", "rolloff_hz", "bw_ratio", "flatness",
-                    "bandwidth_error")}
-            for cid, blob in zip(pdf[id_col], pdf[bytes_col]):
-                out["__id"].append(cid)
-                try:
-                    _c, sr, pcm = audio.decode(bytes(blob))
-                    x = np.asarray(pcm, dtype=np.float32)
-                    mag2 = (np.abs(np.fft.rfft(x)) ** 2
-                            if len(x) else np.zeros(0))
-                    r = _rolloff_from_power(mag2, int(sr), len(x), q)
-                    f = _flatness_from_power(mag2)
-                    out["dec_sr"].append(int(sr))
-                    out["rolloff_hz"].append(round(r, 6))
-                    out["bw_ratio"].append(round(r / (sr / 2.0), 6) if sr else 0.0)
-                    out["flatness"].append(round(f, 6))
-                    out["bandwidth_error"].append(None)
-                except Exception as exc:
-                    out["dec_sr"].append(None)
-                    out["rolloff_hz"].append(None)
-                    out["bw_ratio"].append(None)
-                    out["flatness"].append(None)
-                    out["bandwidth_error"].append(str(exc)[:200])
-            yield pd.DataFrame(out)
-
-    schema = (f"__id string, dec_sr int, rolloff_hz double, "
-              f"bw_ratio double, flatness double, bandwidth_error string")
-    return clips.select(
-        F.col(id_col).alias(id_col), F.col(bytes_col)
-    ).mapInPandas(run, schema).withColumnRenamed("__id", id_col)
+    return map_decoded(
+        clips.select(F.col(id_col).cast("string"), F.col(bytes_col).alias("bytes")),
+        [id_col],
+        "dec_sr int, rolloff_hz double, bw_ratio double, flatness double",
+        per_clip,
+        "bandwidth_error",
+    )

@@ -21,9 +21,9 @@ loudness-insensitive — the same spectrum at two lengths collides. Pair
 groups with the decode facts' ``dec_ms`` when recording-level identity
 (not content identity) is required.
 
-Spark-first plan: ONE narrow ``mapInPandas`` decode+fingerprint pass
-(bytes never shuffle — only the 8-byte fingerprint leaves the scan),
-then a groupBy on the fingerprint for exact-content groups, or the
+Spark-first plan: ONE narrow decode+fingerprint pass on the shared
+per-clip decode loop (``rules.audio_rules.map_decoded``; bytes never
+shuffle — only the 8-byte fingerprint leaves the scan), then a groupBy on the fingerprint for exact-content groups, or the
 chunk-blocked self-join + hamming verify for near matches. Both are the
 same shuffle shapes as the text dedup family, already audited for
 10^12-row behavior (PLANS.md).
@@ -36,15 +36,13 @@ payloads.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import similarity as S
+from ..rules.audio_rules import map_decoded
 from .dedup import _finalize
 
 FP_SCHEMA = "id string, fp long, fp_error string"
@@ -92,24 +90,15 @@ def audio_fingerprints(
     violations, not dedup candidates). Only (id, 8-byte fp) survives the
     scan — the binary column never reaches a shuffle.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from nadeefiler_spark import audio  # import on executor
-
-        for pdf in batches:
-            ids, fps, errs = [], [], []
-            for cid, blob in zip(pdf[id_col], pdf[bytes_col]):
-                ids.append(cid)
-                try:
-                    _codec, sr, pcm = audio.decode(bytes(blob))
-                    fps.append(pcm_fingerprint64(pcm, int(sr)))
-                    errs.append(None)
-                except Exception as exc:
-                    fps.append(None)
-                    errs.append(str(exc)[:200])
-            yield pd.DataFrame({"id": ids, "fp": pd.array(fps, dtype="Int64"), "fp_error": errs})
-
-    return clips.select(id_col, bytes_col).mapInPandas(run, FP_SCHEMA)
+    return map_decoded(
+        clips.select(
+            F.col(id_col).cast("string").alias("id"), F.col(bytes_col).alias("bytes")
+        ),
+        ["id"],
+        "fp bigint",
+        lambda row, codec, sr, pcm: (pcm_fingerprint64(pcm, int(sr)),),
+        "fp_error",
+    )
 
 
 def audio_content_dup_groups(
@@ -121,16 +110,7 @@ def audio_content_dup_groups(
     different container/codec (same decoded PCM -> same fingerprint).
     One shuffle on the 8-byte fingerprint.
     """
-    fps = audio_fingerprints(clips, id_col, bytes_col).where(F.col("fp").isNotNull())
-    return (
-        fps.groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_clips"),
-            F.min("id").alias("keeper_id"),
-            F.sort_array(F.collect_list("id")).alias("clip_ids"),
-        )
-        .where(F.col("n_clips") > 1)
-    )
+    return dup_groups_from_facts(audio_fingerprints(clips, id_col, bytes_col), id_col="id")
 
 
 def audio_near_dup_pairs(

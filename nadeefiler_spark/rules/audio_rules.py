@@ -5,8 +5,10 @@ decoded-facts DataFrame.
 Reference parity: nadeefiler's non-JS profilers run as child processes
 fed a re-materialized CSV (``/root/reference/profilers/worker.js:160-175``,
 ``profilers/outliers/index.js:15-42``); the Spark-first design replaces
-that with ``mapInPandas`` — the decode runs inside executors on Arrow
-batches, no per-row Python (input_hint), no temp files, no process hops.
+that with one ``mapInPandas`` decode loop (:func:`map_decoded`) that
+every audio pass shares, as the reference harness owns the pass and a
+profiler supplies only its per-record analysis — the decode runs inside
+executors on Arrow batches, no temp files, no process hops.
 
 The expensive part (binary decode + SNR vs an independently re-rendered
 reference waveform) happens exactly once regardless of how many audio
@@ -30,7 +32,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .. import audio
 from .base import Rule, RuleContext
 
 DECODED_SCHEMA = (
@@ -76,12 +80,83 @@ def vad_stats(pcm: "np.ndarray", sr_hz: int) -> tuple[float, int, int]:
     return ratio, n_runs, int(round(longest * flen * 1000.0 / sr_hz))
 
 
+def map_decoded(
+    clips: DataFrame, carry, fields_ddl: str, per_clip, error_col: str
+) -> DataFrame:
+    """The one per-clip decode pass every audio operator shares.
+
+    One narrow ``mapInPandas`` over ``clips`` (the ``carry`` columns,
+    at least the clip key, plus ``bytes``) decodes each blob once and calls ``per_clip(row,
+    codec, sr, pcm)``, where ``row`` maps the carry columns to the
+    clip's values; it returns one value per field of ``fields_ddl``.
+    Any exception (a garbage container, a NULL blob, a per-clip stat
+    that cannot handle the decoded PCM) sets every field NULL and writes
+    ``str(exc)[:200]`` to ``error_col``: a bad clip is an error row,
+    never a failed job. Output columns: the carry columns as typed in
+    ``clips``, the fields, then ``error_col``; callers reorder with a
+    final select. bigint fields ship as pandas ``Int64``, so 64-bit
+    values (the content fingerprint) keep every bit instead of a
+    float64 round trip.
+    """
+    fields = T.StructType.fromDDL(fields_ddl)
+    names = fields.names
+    bigints = {f.name for f in fields if isinstance(f.dataType, T.LongType)}
+    nulls = (None,) * len(names)
+    carry = list(carry)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            vals, errs = [], []
+            carried = zip(*(pdf[c].tolist() for c in carry))
+            for row, blob in zip(carried, pdf["bytes"]):
+                try:
+                    codec, sr, pcm = audio.decode(bytes(blob))
+                    vals.append(tuple(per_clip(dict(zip(carry, row)), codec, sr, pcm)))
+                    errs.append(None)
+                except Exception as exc:  # garbage container, NULL blob
+                    vals.append(nulls)
+                    errs.append(str(exc)[:200])
+            out = {c: pdf[c].to_numpy() for c in carry}
+            for name, col in zip(names, list(zip(*vals)) or [()] * len(names)):
+                out[name] = pd.array(col, dtype="Int64") if name in bigints else list(col)
+            out[error_col] = errs
+            yield pd.DataFrame(out)
+
+    schema = T.StructType(
+        [clips.schema[c] for c in carry] + fields.fields
+        + [T.StructField(error_col, T.StringType())]
+    )
+    return clips.select(*carry, "bytes").mapInPandas(run, schema)
+
+
+def _qc_facts(pcm: "np.ndarray", sr_hz: int) -> tuple[float, float, float]:
+    if not len(pcm):
+        return 0.0, 1.0, 0.0
+    ax = np.abs(pcm.astype(np.int32))
+    return (
+        float(np.mean(ax >= 32000)),
+        float(np.mean(ax <= 327)),
+        float(pcm.mean()) / 32768.0,
+    )
+
+
+def _loudness_facts(pcm: "np.ndarray", sr_hz: int) -> tuple[float, float]:
+    if len(pcm):
+        x = pcm.astype(np.float64) / 32768.0
+        levels = (float(np.sqrt(np.mean(x * x))), float(np.max(np.abs(x))))
+    else:
+        levels = (0.0, 0.0)
+    return tuple(
+        max(-120.0, 20.0 * float(np.log10(v))) if v > 0 else -120.0 for v in levels
+    )
+
+
 def decode_facts(
     clips: DataFrame, with_snr: bool = True, with_fp: bool = False,
     with_qc: bool = False, with_vad: bool = False,
     with_loudness: bool = False,
 ) -> DataFrame:
-    """One narrow mapInPandas pass: bytes -> decoded facts per clip.
+    """One :func:`map_decoded` pass: bytes -> decoded facts per clip.
 
     ``snr_db`` compares decoded PCM against an independent deterministic
     re-render of the clip's reference waveform (the sandbox stand-in for
@@ -111,127 +186,51 @@ def decode_facts(
     manifest (:func:`loudness_stats`). Off by default like the other
     opt-ins.
     """
+    from ..operators.audio_fp import pcm_fingerprint64
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from nadeefiler_spark import audio  # import on executor
+    groups = [(ddl, fn) for on, ddl, fn in (
+        (with_fp, "fp bigint", lambda pcm, sr: (pcm_fingerprint64(pcm, sr),)),
+        (with_qc, "clip_ratio double, silence_ratio double, dc_offset double",
+         _qc_facts),
+        (with_vad, "speech_ratio double, n_speech_runs int, longest_silence_ms int",
+         vad_stats),
+        (with_loudness, "rms_dbfs double, peak_dbfs double", _loudness_facts),
+    ) if on]
 
-        if with_fp:
-            from nadeefiler_spark.operators.audio_fp import pcm_fingerprint64
+    def per_clip(row, codec, sr, pcm):
+        sr = int(sr)
+        snr = None
+        if with_snr:
+            # float32 reference, fused SNR: two fewer full-array
+            # materializations per clip (the decode pass is
+            # memory-bandwidth-bound)
+            ref = audio.render_wave_f32(row["clip_id"], sr, len(pcm))
+            snr = float(np.clip(audio.snr_db_f32(ref, pcm), -1e6, 1e6))  # inf -> finite sentinel
+        out = (codec, sr, len(pcm), int(round(1000.0 * len(pcm) / sr)) if sr else 0, snr)
+        for _, fn in groups:
+            out += fn(pcm, sr)
+        return out
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "part", "clip_id", "sr_hz", "dur_ms", "codec", "n_bytes",
-                "dec_codec", "dec_sr", "dec_n", "dec_ms", "snr_db", "decode_error",
-            )}
-            if with_fp:
-                out["fp"] = []
-            if with_qc:
-                out["clip_ratio"] = []
-                out["silence_ratio"] = []
-                out["dc_offset"] = []
-            if with_vad:
-                out["speech_ratio"] = []
-                out["n_speech_runs"] = []
-                out["longest_silence_ms"] = []
-            if with_loudness:
-                out["rms_dbfs"] = []
-                out["peak_dbfs"] = []
-            for part, cid, sr, dur, codec, blob in zip(
-                pdf["part"], pdf["clip_id"], pdf["sr_hz"], pdf["dur_ms"],
-                pdf["codec"], pdf["bytes"],
-            ):
-                out["part"].append(part)
-                out["clip_id"].append(cid)
-                out["sr_hz"].append(sr)
-                out["dur_ms"].append(dur)
-                out["codec"].append(codec)
-                # byte length feeds the profile stage's `bytes` column
-                # stats (all length-derived), so profiling never has to
-                # re-scan the binary column (engine._run_profile)
-                out["n_bytes"].append(len(blob) if blob is not None else None)
-                try:
-                    dec_codec, dec_sr, pcm = audio.decode(bytes(blob))
-                    dec_ms = int(round(1000.0 * len(pcm) / dec_sr)) if dec_sr else 0
-                    if with_snr:
-                        # float32 reference, fused SNR: two fewer
-                        # full-array materializations per clip (the
-                        # decode pass is memory-bandwidth-bound)
-                        ref = audio.render_wave_f32(cid, int(dec_sr), len(pcm))
-                        snr = audio.snr_db_f32(ref, pcm)
-                        snr = float(np.clip(snr, -1e6, 1e6))  # inf -> finite sentinel
-                    else:
-                        snr = None
-                    out["dec_codec"].append(dec_codec)
-                    out["dec_sr"].append(int(dec_sr))
-                    out["dec_n"].append(len(pcm))
-                    out["dec_ms"].append(dec_ms)
-                    out["snr_db"].append(snr)
-                    out["decode_error"].append(None)
-                    if with_fp:
-                        out["fp"].append(pcm_fingerprint64(pcm, int(dec_sr)))
-                    if with_qc:
-                        if len(pcm):
-                            ax = np.abs(pcm.astype(np.int32))
-                            out["clip_ratio"].append(float(np.mean(ax >= 32000)))
-                            out["silence_ratio"].append(float(np.mean(ax <= 327)))
-                            out["dc_offset"].append(float(pcm.mean()) / 32768.0)
-                        else:
-                            out["clip_ratio"].append(0.0)
-                            out["silence_ratio"].append(1.0)
-                            out["dc_offset"].append(0.0)
-                    if with_vad:
-                        ratio, runs, sil_ms = vad_stats(pcm, int(dec_sr))
-                        out["speech_ratio"].append(ratio)
-                        out["n_speech_runs"].append(runs)
-                        out["longest_silence_ms"].append(sil_ms)
-                    if with_loudness:
-                        if len(pcm):
-                            x = pcm.astype(np.float64) / 32768.0
-                            rms = float(np.sqrt(np.mean(x * x)))
-                            peak = float(np.max(np.abs(x)))
-                        else:
-                            rms = peak = 0.0
-                        out["rms_dbfs"].append(
-                            max(-120.0, 20.0 * float(np.log10(rms)))
-                            if rms > 0 else -120.0
-                        )
-                        out["peak_dbfs"].append(
-                            max(-120.0, 20.0 * float(np.log10(peak)))
-                            if peak > 0 else -120.0
-                        )
-                except Exception as exc:  # garbage container
-                    out["dec_codec"].append(None)
-                    out["dec_sr"].append(None)
-                    out["dec_n"].append(None)
-                    out["dec_ms"].append(None)
-                    out["snr_db"].append(None)
-                    out["decode_error"].append(str(exc)[:200])
-                    if with_fp:
-                        out["fp"].append(None)
-                    if with_qc:
-                        out["clip_ratio"].append(None)
-                        out["silence_ratio"].append(None)
-                        out["dc_offset"].append(None)
-                    if with_vad:
-                        out["speech_ratio"].append(None)
-                        out["n_speech_runs"].append(None)
-                        out["longest_silence_ms"].append(None)
-                    if with_loudness:
-                        out["rms_dbfs"].append(None)
-                        out["peak_dbfs"].append(None)
-            if with_fp:
-                out["fp"] = pd.array(out["fp"], dtype="Int64")
-            yield pd.DataFrame(out)
-
-    cols = ["part", "clip_id", "sr_hz", "dur_ms", "codec", "bytes"]
-    schema = DECODED_SCHEMA + (", fp bigint" if with_fp else "")
-    if with_qc:
-        schema += ", clip_ratio double, silence_ratio double, dc_offset double"
-    if with_vad:
-        schema += ", speech_ratio double, n_speech_runs int, longest_silence_ms int"
-    if with_loudness:
-        schema += ", rms_dbfs double, peak_dbfs double"
-    return clips.select(*cols).mapInPandas(run, schema)
+    facts = map_decoded(
+        clips.select(
+            F.col("part").cast("string"), F.col("clip_id").cast("string"),
+            F.col("sr_hz").cast("int"), F.col("dur_ms").cast("int"),
+            F.col("codec").cast("string"),
+            # byte length feeds the profile stage's `bytes` column stats
+            # (all length-derived), so profiling never has to re-scan
+            # the binary column (engine._run_profile)
+            F.length("bytes").alias("n_bytes"), "bytes",
+        ),
+        ["part", "clip_id", "sr_hz", "dur_ms", "codec", "n_bytes"],
+        ", ".join(
+            ["dec_codec string, dec_sr int, dec_n bigint, dec_ms int, snr_db double"]
+            + [ddl for ddl, _ in groups]
+        ),
+        per_clip,
+        "decode_error",
+    )
+    schema = ", ".join([DECODED_SCHEMA] + [ddl for ddl, _ in groups])
+    return facts.select(*T.StructType.fromDDL(schema).names)
 
 
 def loudness_stats(clips: DataFrame, target_dbfs: float = -20.0) -> DataFrame:

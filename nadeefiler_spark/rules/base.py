@@ -8,8 +8,9 @@ the pass over the data; the plug-in states only per-tuple logic. Here a
 row rule is likewise its :meth:`Rule.predicate` (the ``onTuple`` analog:
 Catalyst columns, never Python rows) plus, when it reads a frame other
 than ``ctx.clips``, :meth:`Rule.rows` (its "selector"). The engine folds
-every predicate rule over the row source it names into one pass, and the
-default :meth:`Rule.violations` applies the same predicate standalone.
+every predicate rule over the row source it names into one pass
+(:func:`fold`), and the default :meth:`Rule.violations` is that fold of
+the rule alone.
 Only rules that need joins or aggregation write ``violations()``
 themselves; either way the result is a violations DataFrame (what the
 "resultsCatcher" writes).
@@ -22,7 +23,9 @@ rule reads the upstream stage's output table from the context.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,13 +65,13 @@ class Rule:
 
     def violations(self, ctx: RuleContext) -> DataFrame:
         """The rows of :meth:`rows` that :meth:`predicate` flags, staged
-        by :meth:`prepare` — the standalone form of the engine's fold."""
-        pd_ = self.predicate(ctx)
-        if pd_ is None:
+        by :meth:`prepare`: the engine's :func:`fold` of this rule alone,
+        so the standalone plan is the one the engine runs (a bare
+        ``where(predicate)`` lets the optimizer re-derive staged columns
+        and can bust the 64 KB codegen limit)."""
+        if self.predicate(ctx) is None:
             raise NotImplementedError
-        pred, detail = pd_
-        rows = self.prepare(self.rows(ctx), ctx)
-        return self.shape(rows.where(pred), ctx, self.name, detail)
+        return fold([self], ctx)
 
     def predicate(self, ctx: RuleContext):
         """Return ``(violation_pred, detail)`` Columns evaluated per row of
@@ -131,6 +134,62 @@ class Rule:
         return self.shape(rows, ctx, self.name, detail)
 
 
+def fold(rules: list[Rule], ctx: RuleContext) -> DataFrame:
+    """The violations of ``rules`` as one frame. The predicate rules (pure
+    row filters) fold into ONE scan per row source — the frame
+    :meth:`Rule.rows` returns, matched by identity: ctx.clips for the
+    constraint rules, the persisted ctx.decoded for the audio rules — as
+    array<struct(rule, bad, detail)> -> filter -> explode. Join/agg rules
+    keep their own branch; everything unions into a single write job."""
+    sources: dict[int, list] = {}  # id(rows) -> [rows, staged scan, structs]
+    branches: list[DataFrame] = []
+    for rule in rules:
+        pd_ = rule.predicate(ctx)
+        if pd_ is None:
+            branches.append(rule.violations(ctx))
+            continue
+        rows = rule.rows(ctx)
+        src = sources.setdefault(id(rows), [rows, rows, []])
+        # rules with staged helper columns (Rule.prepare) chain their
+        # staging over the shared scan; the predicates then reference
+        # MATERIALIZED columns, keeping each projection's generated code
+        # small (the flat header-probe tree busts Janino's 64 KB limit).
+        # A helper column colliding with an input column or another
+        # rule's staging makes every downstream reference ambiguous;
+        # fail loudly with attribution instead of letting the whole
+        # stage die on AMBIGUOUS_REFERENCE
+        src[1] = rule.prepare(src[1], ctx)
+        dups = [c for c, n in Counter(src[1].columns).items() if n > 1]
+        if dups:
+            raise ValueError(
+                f"rule {rule.name!r}: prepare() staged duplicate "
+                f"column(s) {dups} onto the shared {rule.stage} scan; "
+                "namespace helper columns per rule instance "
+                "(__<rule.name>_ prefix convention, rules/base.py)"
+            )
+        pred, detail = pd_
+        # the detail only for flagged rows, as a filter would: a detail
+        # may be undefined where the predicate is false (a rate over a
+        # zero duration raises under ANSI division)
+        src[2].append(F.struct(
+            F.lit(rule.name).alias("rule"),
+            pred.alias("bad"),
+            F.when(pred, detail.cast("string")).alias("detail"),
+        ))
+    for _, scan, folded in sources.values():
+        hits = scan.select(
+            F.col(ctx.part_col).cast("string").alias("part"),
+            F.col(ctx.key_col).cast("string").alias("clip_id"),
+            F.filter(F.array(*folded), lambda s: s["bad"]).alias("vs"),
+        ).where(F.size("vs") > 0)
+        branches.append(
+            hits.select("part", F.explode("vs").alias("v"), "clip_id")
+            .select("part", "v.rule", "clip_id", "v.detail")
+        )
+    out = reduce(DataFrame.unionByName, branches)
+    return out.select("part", "rule", "clip_id", "detail")
+
+
 def topo_sort(rules: list[Rule]) -> list[Rule]:
     """Stable topological order over ``depends_on`` (cascade tree analog).
 
@@ -141,8 +200,6 @@ def topo_sort(rules: list[Rule]) -> list[Rule]:
     second one — ADVICE r4)."""
     by_name = {r.name: r for r in rules}
     if len(by_name) != len(rules):
-        from collections import Counter
-
         dupes = sorted(
             n for n, c in Counter(r.name for r in rules).items() if c > 1
         )

@@ -293,3 +293,116 @@ def test_loudness_stats_twin(spark):
     assert got["loud-sine01"]["would_clip"] is False
     assert got["loud-spikes"]["peak_dbfs"] == round(20 * math.log10(32767 / 32768.0), 6)
     assert got["loud-spikes"]["would_clip"] is True
+
+
+_CLIPS_DDL = "part string, clip_id string, sr_hz int, dur_ms int, codec string, bytes binary"
+
+
+def _clip_row(clip_id, blob):
+    return ("p0", clip_id, 16000, 100, "pcm_s16le", blob)
+
+
+def _good_blob(clip_id="clip-good"):
+    return audio.encode(audio.render_pcm(clip_id, 16000, 100), 16000, "pcm_s16le")
+
+
+def test_zero_hz_clip_is_a_decode_error_row(spark):
+    """A WAV whose header says 0 Hz decodes (sr 0), but the fingerprint
+    cannot band a 0 Hz spectrum: that clip becomes a decode_error row
+    with every decoded field NULL, and the job does not fail."""
+    from nadeefiler_spark.rules.audio_rules import decode_facts
+
+    pcm = audio.render_pcm("clip-zero", 16000, 100)
+    clips = spark.createDataFrame(
+        [_clip_row("clip-good", _good_blob()),
+         _clip_row("clip-zero", audio._wav_encode(pcm, 0))],
+        _CLIPS_DDL,
+    )
+    got = {r["clip_id"]: r for r in
+           decode_facts(clips, with_snr=False, with_fp=True).collect()}
+    assert set(got) == {"clip-good", "clip-zero"}
+    bad, good = got["clip-zero"], got["clip-good"]
+    decoded = ("dec_codec", "dec_sr", "dec_n", "dec_ms", "snr_db", "fp")
+    assert all(bad[c] is None for c in decoded), bad
+    assert "zero" in bad["decode_error"]  # numpy: "...cannot include zero"
+    assert good["decode_error"] is None and good["fp"] is not None
+    assert good["dec_sr"] == 16000
+
+
+def _decode_passes():
+    from nadeefiler_spark.operators.audio_features import (
+        FEATURES_SCHEMA, RESAMPLE_SCHEMA, audio_features, bandwidth_stats,
+        resample_clips,
+    )
+    from nadeefiler_spark.operators.audio_fp import FP_SCHEMA, audio_fingerprints
+    from nadeefiler_spark.rules.audio_rules import DECODED_SCHEMA, decode_facts
+
+    facts_keys = ("part", "clip_id", "sr_hz", "dur_ms", "codec", "n_bytes")
+    groups = {
+        "with_fp": "fp bigint",
+        "with_qc": "clip_ratio double, silence_ratio double, dc_offset double",
+        "with_vad": "speech_ratio double, n_speech_runs int, longest_silence_ms int",
+        "with_loudness": "rms_dbfs double, peak_dbfs double",
+    }
+    # (id, pass, schema DDL, key column, error column, columns not
+    # computed from the decode: carried through, literal, or NULL by flag)
+    cases = [
+        ("decode_facts", decode_facts, DECODED_SCHEMA, "clip_id", "decode_error",
+         facts_keys),
+        ("decode_facts_nosnr", lambda c: decode_facts(c, with_snr=False),
+         DECODED_SCHEMA, "clip_id", "decode_error", facts_keys + ("snr_db",)),
+    ]
+    for flag, ddl in groups.items():
+        cases.append((
+            f"decode_facts_{flag}", lambda c, f=flag: decode_facts(c, **{f: True}),
+            f"{DECODED_SCHEMA}, {ddl}", "clip_id", "decode_error", facts_keys,
+        ))
+    cases.append((
+        "decode_facts_all", lambda c: decode_facts(c, **{f: True for f in groups}),
+        ", ".join([DECODED_SCHEMA, *groups.values()]), "clip_id", "decode_error",
+        facts_keys,
+    ))
+    cases += [
+        ("audio_fingerprints", audio_fingerprints, FP_SCHEMA, "id", "fp_error", ("id",)),
+        ("audio_features", lambda c: audio_features(c, carry_cols=("part",)),
+         FEATURES_SCHEMA + ", part string", "id", "feat_error", ("id", "part")),
+        ("resample_clips", lambda c: resample_clips(c, 8000), RESAMPLE_SCHEMA,
+         "clip_id", "resample_error", ("clip_id", "sr_hz", "codec")),
+        ("bandwidth_stats", bandwidth_stats,
+         "clip_id string, dec_sr int, rolloff_hz double, bw_ratio double, "
+         "flatness double, bandwidth_error string",
+         "clip_id", "bandwidth_error", ("clip_id",)),
+    ]
+    return cases
+
+
+@pytest.mark.parametrize("case", _decode_passes(), ids=lambda c: c[0])
+def test_decode_pass_contract(spark, case):
+    """Every per-clip decode pass keeps its output schema, turns a
+    garbage blob and a NULL blob into error rows (every computed field
+    NULL, a non-empty error of at most 200 chars) and leaves the good
+    clip's row exactly as it is when that clip runs alone."""
+    from pyspark.sql import types as T
+
+    _, run, ddl, key, err, unchecked = case
+    good = _clip_row("clip-good", _good_blob())
+    clips = spark.createDataFrame(
+        [good, _clip_row("clip-garbage", b"\x01\x02garbage-not-any-container"),
+         _clip_row("clip-null", None)],
+        _CLIPS_DDL,
+    )
+    out = run(clips)
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in T.StructType.fromDDL(ddl)
+    ]
+    fields = [c for c in out.columns if c not in unchecked and c != err]
+    got = {r[key]: r for r in out.collect()}
+    assert set(got) == {"clip-good", "clip-garbage", "clip-null"}
+    for bad in ("clip-garbage", "clip-null"):
+        row = got[bad]
+        assert all(row[c] is None for c in fields), row
+        assert 0 < len(row[err]) <= 200
+    assert got["clip-good"][err] is None
+    assert all(got["clip-good"][c] is not None for c in fields)
+    alone = run(spark.createDataFrame([good], _CLIPS_DDL)).collect()
+    assert [got["clip-good"]] == alone

@@ -227,6 +227,31 @@ def test_fused_constraints_scan_keeps_codegen(spark, tmp_path, capfd):
     assert "InternalCompilerException" not in err
 
 
+def test_standalone_triage_violations_keep_codegen(spark):
+    """HeaderTriageRule.violations() run on its own, outside the engine,
+    must keep whole-stage codegen too. It plans the same one-rule fold
+    the engine runs; a bare where(predicate) over the staged probe lets
+    the optimizer re-derive the flat finding tree, and Janino gives up
+    with "Code grows beyond 64 KB".
+
+    The check compiles every whole-stage subtree of the plan (Spark's
+    codegen explain mode) and reads its bytecode stats: a subtree that
+    fails to compile reports maxMethodCodeSize -1. capfd cannot see the
+    compile error here: the JVM keeps the stderr it inherited when the
+    session started."""
+    import re
+
+    from nadeefiler_spark.rules.audio_rules import HeaderTriageRule
+    from nadeefiler_spark.rules.base import RuleContext
+
+    clips = datagen.clips_df(spark, datagen.GenConfig(n_rows=300, seed=7))
+    df = HeaderTriageRule().violations(RuleContext(spark, clips))
+    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
+    sizes = [int(n) for n in re.findall(r"maxMethodCodeSize:(-?\d+)", plan)]
+    assert sizes and min(sizes) > 0, sizes
+    assert df.count() > 0  # the planted container residues are flagged
+
+
 def test_two_triage_instances_fold_without_collision(spark, tmp_path):
     """Two HeaderTriageRule instances (distinct names, different
     tolerances) fold into the SAME shared constraints scan: staging is

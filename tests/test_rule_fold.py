@@ -1,5 +1,5 @@
-"""A row rule is its predicate: the engine's fold of a predicate rule
-gives the same rows as the rule's own ``violations()``, the audio stage
+"""A row rule is its predicate: the fold of a predicate rule gives the
+same rows as a plain filter on that predicate, the audio stage
 scans the persisted decode once, and the rule stage counts violations
 right past the Observation path's 64-part limit."""
 
@@ -22,7 +22,7 @@ from nadeefiler_spark.rules.audio_rules import (
     decode_facts,
     default_audio_rules,
 )
-from nadeefiler_spark.rules.base import RuleContext
+from nadeefiler_spark.rules.base import RuleContext, fold
 from nadeefiler_spark.rules.constraints import (
     DomainRule,
     PiiRule,
@@ -65,14 +65,17 @@ def _rows(df):
     AudioQcRule(),
 ], ids=lambda r: type(r).__name__)
 def test_fold_of_one_rule_is_its_violations(fold_ctx, rule):
-    folded = _rows(ValidationEngine._fold_violations(rule.stage, [rule], fold_ctx))
-    assert folded and folded == _rows(rule.violations(fold_ctx))
+    folded = _rows(rule.violations(fold_ctx))
+    pred, detail = rule.predicate(fold_ctx)
+    rows = rule.prepare(rule.rows(fold_ctx), fold_ctx)
+    filtered = rule.shape(rows.where(pred), fold_ctx, rule.name, detail)
+    assert folded and folded == _rows(filtered)
 
 
 def test_audio_fold_scans_the_persisted_decode_once(fold_ctx):
     """The four default audio rules are one fold over the persisted
     decode facts, not a union of one filtered scan per rule."""
-    frame = ValidationEngine._fold_violations("audio", default_audio_rules(), fold_ctx)
+    frame = fold(default_audio_rules(), fold_ctx)
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") == 1, plan
     assert set(_rows(frame)) == set().union(
